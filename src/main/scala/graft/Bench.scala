@@ -194,6 +194,7 @@ object Bench {
       // Scale-correct, not a local[32] tune: AQE sizes partitions by
       // advisory bytes, so corpus-scale cache builds keep parallelism.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

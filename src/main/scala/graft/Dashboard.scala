@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,34 +21,151 @@ import org.apache.spark.sql.functions._
   *   4 discount bar: HAVING-gated discount rollup (app.py:332-374)
   *   5 quadrant bubble: conditional aggs + global medians (app.py:380-439)
   *
+  * Per-publish snapshot. The reference re-queries the marts on every page
+  * load (layout-as-function, app.py:535) so a page always shows the latest
+  * publish. Here every chart serves from a memo keyed by (session, chart,
+  * input paths), and every call first takes a driver-side fingerprint of
+  * the chart's inputs: name, length and mtime of each file under them
+  * (one Hadoop `listFiles` per path). An entry built for another
+  * fingerprint is replaced, and its cached frame unpersisted. A Spark
+  * overwrite writes new part-file names, so a republish changes the
+  * fingerprint and the next load recomputes; the per-load freshness is
+  * kept. Charts 2–5 depend on the published files only: they are
+  * collected once per fingerprint and served as local relations, so
+  * probing and collecting them runs no Spark job. Chart 1 also depends
+  * on its date window: it runs one aggregate per load over a persisted
+  * projection of the fact, built once per fingerprint.
+  *
   * Usage: runMain graft.Dashboard [sfDir] [martDir]
   */
 object Dashboard {
 
-  /** Chart 1: quartile box data per brand from the materialized fact,
-    * windowed to a date range — with the reference's empty-input fallback
-    * (app.py:84-113): if the window has no rows, re-plan unfiltered. The
-    * emptiness probe is a cheap `limit(1)` scan, not a full count.
+  /** (path, length, mtime) of every file under a chart's inputs. */
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  private final case class MemoKey(spark: SparkSession, chart: String, paths: Seq[String])
+
+  /** One memoized frame, built at most once by whichever load reaches it
+    * first; concurrent loads of the same key wait for that build, loads
+    * of other keys do not.
     */
-  def chart1BoxData(spark: SparkSession, martDir: String,
-      from: String = "1998-01-01", to: String = "1998-03-31"): DataFrame = {
-    val fact = spark.read.parquet(s"$martDir/fact_prices")
+  private final class MemoEntry(val fingerprint: Fingerprint, build: () => DataFrame) {
+    @volatile private var built: DataFrame = null
+    @volatile private var released = false
+    lazy val frame: DataFrame = {
+      val df = build()
+      built = df
+      if (released) df.unpersist(blocking = false)
+      df
+    }
+    /** Unpersists the frame once it is built, now or when its build ends. */
+    def release(): Unit = {
+      released = true
+      Option(built).foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  private val memoTable = new ConcurrentHashMap[MemoKey, MemoEntry]()
+
+  private def fingerprint(spark: SparkSession, paths: Seq[String]): Fingerprint = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.flatMap { p =>
+      val path = new Path(p)
+      val files = path.getFileSystem(conf).listFiles(path, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toVector.sorted
+    }
+  }
+
+  /** `build`'s frame for the current files under `paths`: memoized while
+    * their fingerprint holds, rebuilt once it changes. A fingerprint that
+    * cannot be taken (inputs gone) drops the entry and throws.
+    */
+  private def memo(spark: SparkSession, chart: String, paths: Seq[String])(
+      build: => DataFrame): DataFrame = {
+    val key = MemoKey(spark, chart, paths)
+    val fp = try fingerprint(spark, paths) catch {
+      case e: Exception =>
+        Option(memoTable.remove(key)).foreach(_.release())
+        throw e
+    }
+    var replaced: Option[MemoEntry] = None
+    val entry = memoTable.compute(key, (_, old) =>
+      if (old != null && old.fingerprint == fp) old
+      else { replaced = Option(old); new MemoEntry(fp, () => build) })
+    replaced.foreach(_.release())
+    entry.frame
+  }
+
+  /** `df` collected once and served as a local relation. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Chart 1's input: the priced, branded rows of the materialized fact. */
+  private[graft] def priceFact(spark: SparkSession, martDir: String): DataFrame =
+    spark.read.parquet(s"$martDir/fact_prices")
       .filter(col("p_brand").isNotNull && col("regular_price") > 0)
-    val windowed = fact.filter(col("effective_date").between(from, to))
-    val base = if (windowed.limit(1).isEmpty) fact else windowed
-    base.groupBy(col("p_brand"))
+      .select("p_brand", "regular_price", "effective_date")
+
+  private def inWindow(fact: DataFrame, from: String, to: String): DataFrame =
+    fact.filter(col("effective_date").between(from, to))
+
+  /** Chart 1's quartile box data per brand, ordered by median. */
+  private[graft] def boxData(fact: DataFrame): DataFrame =
+    fact.groupBy(col("p_brand"))
       .agg(
         round(percentile(col("regular_price"), lit(0.25)), 4).as("q1"),
         round(percentile(col("regular_price"), lit(0.5)), 4).as("median"),
         round(percentile(col("regular_price"), lit(0.75)), 4).as("q3"),
         count(lit(1)).as("n"))
       .orderBy(desc("median"))
+
+  /** Chart 1 built directly off the parquet, with the reference's
+    * empty-input fallback (app.py:84-113): if the window has no rows,
+    * re-plan unfiltered.
+    */
+  private[graft] def chart1Plan(spark: SparkSession, martDir: String,
+      from: String, to: String): DataFrame = {
+    val fact = priceFact(spark, martDir)
+    val windowed = inWindow(fact, from, to)
+    boxData(if (windowed.limit(1).isEmpty) fact else windowed)
+  }
+
+  /** The persisted chart-1 projection of this publish's fact, in one
+    * partition: a load's grouped, ordered aggregate over it then plans no
+    * exchange and runs as a single job. Three narrow columns of a served
+    * mart; per-job scheduling, not the aggregate's CPU, is what a page
+    * load waits on.
+    */
+  private def factSnapshot(spark: SparkSession, martDir: String): DataFrame =
+    memo(spark, "chart1_fact", Seq(s"$martDir/fact_prices"))(
+      priceFact(spark, martDir).coalesce(1).persist())
+
+  /** Chart 1: quartile box data per brand from the materialized fact,
+    * windowed to a date range — with the reference's empty-input fallback
+    * (app.py:84-113). One collected aggregate per call over the persisted
+    * projection of this publish's fact, and no separate emptiness probe:
+    * the window is empty exactly when the grouped result has no rows, and
+    * then the memoized unfiltered result is served instead.
+    */
+  def chart1BoxData(spark: SparkSession, martDir: String,
+      from: String = "1998-01-01", to: String = "1998-03-31"): DataFrame = {
+    val windowed = local(boxData(inWindow(factSnapshot(spark, martDir), from, to)))
+    if (!windowed.isEmpty) windowed
+    else memo(spark, "chart1_unfiltered", Seq(s"$martDir/fact_prices"))(
+      local(boxData(factSnapshot(spark, martDir))))
   }
 
   /** Chart 2: mart ⋈ dim with a shared min/max color scale across two
     * series (the pandas concat / fillna dataflow, app.py:177-199).
     */
-  def chart2GeoData(spark: SparkSession, sfDir: String, martDir: String): DataFrame = {
+  def chart2GeoData(spark: SparkSession, sfDir: String, martDir: String): DataFrame =
+    memo(spark, "chart2_geo",
+      Seq(s"$martDir/mart_supplier_sales", s"$sfDir/nation.parquet"))(
+      local(chart2Plan(spark, sfDir, martDir)))
+
+  private[graft] def chart2Plan(spark: SparkSession, sfDir: String, martDir: String): DataFrame = {
     val mart = spark.read.parquet(s"$martDir/mart_supplier_sales")
     val nation = Tables.nation(spark, sfDir).select("n_nationkey", "n_name")
     val perNation = mart.join(broadcast(nation),
@@ -61,7 +181,11 @@ object Dashboard {
   }
 
   /** Chart 3: stock recode + share-of-group stacked-bar data. */
-  def chart3StockShare(spark: SparkSession, martDir: String): DataFrame = {
+  def chart3StockShare(spark: SparkSession, martDir: String): DataFrame =
+    memo(spark, "chart3_stock", Seq(s"$martDir/fact_prices"))(
+      local(chart3Plan(spark, martDir)))
+
+  private[graft] def chart3Plan(spark: SparkSession, martDir: String): DataFrame = {
     val fact = spark.read.parquet(s"$martDir/fact_prices")
     val counts = fact
       .groupBy(col("p_brand"),
@@ -76,6 +200,10 @@ object Dashboard {
 
   /** Chart 4: discount rollup with HAVING gate, sorted on the aggregate. */
   def chart4DiscountBar(spark: SparkSession, martDir: String): DataFrame =
+    memo(spark, "chart4_discount", Seq(s"$martDir/fact_prices"))(
+      local(chart4Plan(spark, martDir)))
+
+  private[graft] def chart4Plan(spark: SparkSession, martDir: String): DataFrame =
     spark.read.parquet(s"$martDir/fact_prices")
       .filter(col("discount_pct") > 0)
       .groupBy(col("p_brand"))
@@ -87,7 +215,11 @@ object Dashboard {
   /** Chart 5: quadrant bubble — conditional aggregates per brand plus the
     * global medians as quadrant reference lines, all in one plan.
     */
-  def chart5Quadrant(spark: SparkSession, martDir: String): DataFrame = {
+  def chart5Quadrant(spark: SparkSession, martDir: String): DataFrame =
+    memo(spark, "chart5_quadrant", Seq(s"$martDir/fact_prices"))(
+      local(chart5Plan(spark, martDir)))
+
+  private[graft] def chart5Plan(spark: SparkSession, martDir: String): DataFrame = {
     val fact = spark.read.parquet(s"$martDir/fact_prices")
     val perBrand = fact.groupBy(col("p_brand"))
       .agg(
@@ -116,8 +248,8 @@ object Dashboard {
     * the per-chart `except` guards): a chart never propagates an
     * exception or an empty frame to the page. Spark analog: Left(alert
     * message) when the chart's plan fails to build/execute or yields no
-    * rows (probed with a cheap limit(1), not a full count), Right(df)
-    * otherwise.
+    * rows, Right(df) otherwise. The emptiness probe is a `limit(1)`; on
+    * the local relations the chart functions serve it runs no Spark job.
     */
   def render(chart: => DataFrame, emptyMsg: String, failMsg: String): Either[String, DataFrame] =
     try {
@@ -151,9 +283,10 @@ object Dashboard {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val martDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -166,6 +166,131 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(r.isLeft, s"$name did not degrade on missing marts")
       assert(r.swap.exists(_.contains("unavailable")), s"$name alert text: $r")
     }
+  }
+
+  /** A fresh mart directory holding the two relations the charts read. */
+  private def publishMarts(prefix: String): String = {
+    val out = java.nio.file.Files.createTempDirectory(prefix).toString
+    ops.Marts.factBuild(spark, sf).write.mode("overwrite").parquet(s"$out/fact_prices")
+    ops.Marts.supplierRollup(spark, sf)
+      .write.mode("overwrite").parquet(s"$out/mart_supplier_sales")
+    out
+  }
+
+  /** Chart 1 rows compared as a multiset plus the median order: brands
+    * with tied medians may come back in either order.
+    */
+  private def sameBoxData(a: DataFrame, b: DataFrame): Unit = {
+    val (x, y) = (a.collect().toSeq, b.collect().toSeq)
+    assert(x.map(_.toString).sorted == y.map(_.toString).sorted)
+    assert(x.map(_.getAs[Any]("median")) == y.map(_.getAs[Any]("median")))
+  }
+
+  private def pageDigest(page: Map[String, Either[String, DataFrame]]): Map[String, Any] =
+    page.map { case (name, r) => name -> r.map(_.collect().map(_.toString).sorted.toSeq) }
+
+  /** Spark jobs `body` launches from this thread. Other suites share the
+    * session, so jobs are told apart by job group; a sentinel job in a
+    * second group marks when the listener bus has delivered the rest.
+    */
+  private def jobsRun(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, sentinel) = (s"jobs-${java.util.UUID.randomUUID}", s"end-${java.util.UUID.randomUUID}")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      body
+      sc.setJobGroup(sentinel, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener bus did not deliver the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("memoized charts equal their direct plans row for row") {
+    val out = publishMarts("graft_memo")
+    sameBoxData(Dashboard.chart1BoxData(spark, out),
+      Dashboard.chart1Plan(spark, out, "1998-01-01", "1998-03-31"))
+    sameBoxData(Dashboard.chart1BoxData(spark, out, "1900-01-01", "1900-12-31"),
+      Dashboard.chart1Plan(spark, out, "1900-01-01", "1900-12-31"))
+    Seq(
+      Dashboard.chart2GeoData(spark, sf, out) -> Dashboard.chart2Plan(spark, sf, out),
+      Dashboard.chart3StockShare(spark, out) -> Dashboard.chart3Plan(spark, out),
+      Dashboard.chart4DiscountBar(spark, out) -> Dashboard.chart4Plan(spark, out),
+      Dashboard.chart5Quadrant(spark, out) -> Dashboard.chart5Plan(spark, out)
+    ).foreach { case (memoized, direct) =>
+      assert(memoized.schema == direct.schema)
+      assert(memoized.collect().toSeq == direct.collect().toSeq)
+    }
+  }
+
+  test("a republished mart is served on the next load, never the memoized one") {
+    val out = publishMarts("graft_republish")
+    val before = Dashboard.chart3StockShare(spark, out).collect().toSeq
+    ops.Marts.factBuild(spark, sf).filter(col("discount_pct") > 0)
+      .write.mode("overwrite").parquet(s"$out/fact_prices")
+    val after = Dashboard.chart3StockShare(spark, out).collect().toSeq
+    assert(after != before, "chart 3 served the pre-republish rows")
+    assert(after == Dashboard.chart3Plan(spark, out).collect().toSeq)
+    assert(!after.exists(_.getAs[String]("price_status") == "Full price"))
+  }
+
+  test("a deleted mart degrades to the alert after a memoized load") {
+    val out = publishMarts("graft_deleted")
+    Dashboard.renderAll(spark, sf, out).foreach { case (name, r) =>
+      assert(r.isRight, s"$name degraded on healthy data: $r")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    Dashboard.renderAll(spark, sf, out).foreach { case (name, r) =>
+      assert(r.swap.exists(_.contains("unavailable")), s"$name served after delete: $r")
+    }
+  }
+
+  test("chart 1 on an empty window serves the unfiltered box data") {
+    val out = publishMarts("graft_window")
+    sameBoxData(Dashboard.chart1BoxData(spark, out, "1900-01-01", "1900-12-31"),
+      Dashboard.boxData(Dashboard.priceFact(spark, out)))
+  }
+
+  test("concurrent first page loads agree") {
+    val out = publishMarts("graft_concurrent")
+    val pages = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Any]]()
+    val threads = (0 until 2).map(_ => new Thread(() =>
+      pages.add(pageDigest(Dashboard.renderAll(spark, sf, out)))))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(pages.size == 2, "a page load failed")
+    val Array(a, b) = pages.toArray
+    assert(a == b)
+    assert(a == pageDigest(Dashboard.renderAll(spark, sf, out)))
+  }
+
+  test("a warm page load runs no Spark job for charts 2-5") {
+    val out = publishMarts("graft_jobs")
+    Dashboard.renderAll(spark, sf, out)
+    val rest = jobsRun {
+      Seq(
+        Dashboard.render(Dashboard.chart2GeoData(spark, sf, out), "empty", "failed"),
+        Dashboard.render(Dashboard.chart3StockShare(spark, out), "empty", "failed"),
+        Dashboard.render(Dashboard.chart4DiscountBar(spark, out), "empty", "failed"),
+        Dashboard.render(Dashboard.chart5Quadrant(spark, out), "empty", "failed")
+      ).foreach(r => r.foreach(_.collect()))
+    }
+    assert(rest == 0, s"charts 2-5 ran $rest jobs on a warm load")
+    val chart1 = jobsRun(Dashboard.chart1BoxData(spark, out).collect())
+    val page = jobsRun(Dashboard.renderAll(spark, sf, out).values.foreach(_.foreach(_.collect())))
+    assert(chart1 > 0 && page == chart1, s"warm page ran $page jobs, chart 1 alone $chart1")
   }
 
   test("streaming sessionization emits closed sessions") {
