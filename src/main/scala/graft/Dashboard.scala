@@ -260,11 +260,12 @@ object Dashboard {
     }
 
   /** The five charts behind their degradation arms, with the reference's
-    * alert texts.
+    * alert texts; chart 1 over the window `from`..`to`.
     */
-  def renderAll(spark: SparkSession, sfDir: String,
-      martDir: String): Map[String, Either[String, DataFrame]] = Map(
-    "chart1_box" -> render(chart1BoxData(spark, martDir),
+  def renderAll(spark: SparkSession, sfDir: String, martDir: String,
+      from: String = "1998-01-01",
+      to: String = "1998-03-31"): Map[String, Either[String, DataFrame]] = Map(
+    "chart1_box" -> render(chart1BoxData(spark, martDir, from, to),
       "No price data available for the box plot.",
       "Price distribution chart unavailable"),
     "chart2_geo" -> render(chart2GeoData(spark, sfDir, martDir),

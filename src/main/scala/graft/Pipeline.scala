@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,8 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Staging stays virtual (composed lazily, like dbt views) so its
   * predicates inline into downstream scans; dim/fact/mart are written
-  * `overwrite` (idempotent rebuild). Data-quality checks (§2.11) run after
-  * the build and fail the pipeline on violations, like `dbt test`.
+  * `overwrite` (idempotent rebuild), concurrently, like dbt's model
+  * threads. Data-quality checks (§2.11) run beside the build and fail the
+  * pipeline on violations once it has landed, like `dbt test`.
   *
   * Usage: runMain graft.Pipeline [sfDir] [outDir]
   */
@@ -29,11 +32,11 @@ object Pipeline {
     ext.Dedup.connectedComponents(pairs)._1
   }
 
-  /** Build + materialize every layer; returns the mart row counts. */
-  def run(spark: SparkSession, sfDir: String, outDir: String,
-      labels: Option[DataFrame] = None): Map[String, Long] = {
+  /** Every relation `run` publishes, by name, as its builder plans it. */
+  private[graft] def layers(spark: SparkSession, sfDir: String,
+      labels: Option[DataFrame] = None): Seq[(String, DataFrame)] = {
     val ndLabels = labels.getOrElse(nearDupLabels(spark, sfDir))
-    val layers: Seq[(String, DataFrame)] = Seq(
+    Seq(
       "dim_parts"     -> ops.Marts.a1DistinctDim(spark, sfDir),
       "fact_prices"   -> ops.Marts.factBuild(spark, sfDir),
       "mart_category_distribution" -> ops.Marts.a2CategoryRollup(spark, sfDir),
@@ -42,14 +45,50 @@ object Pipeline {
       "clean_documents" -> ext.Dedup.dedupCorpus(Tables.documents(spark, sfDir)),
       "clean_documents_neardup" -> ext.Dedup.dedupCorpusNearDup(
         Tables.documents(spark, sfDir), ndLabels))
-    val counts = layers.map { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
-      name -> spark.read.parquet(s"$outDir/$name").count()
-    }.toMap
-    val violations = ops.Quality.dqChecks(spark, sfDir)
-      .filter(col("n_violations") > 0).count()
+  }
+
+  /** Build + materialize every layer; returns the mart row counts.
+    *
+    * The layers are independent (dbt runs such models on parallel
+    * threads), so their publishes run at once: each relation's write and
+    * read-back count, and the DQ gate's count, on a thread of its own.
+    * The plans are built here, on the calling thread. The DQ `require`
+    * runs once every write has landed.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      labels: Option[DataFrame] = None): Map[String, Long] = {
+    val built = layers(spark, sfDir, labels)
+    val failedChecks = ops.Quality.dqChecks(spark, sfDir)
+      .filter(col("n_violations") > 0)
+    val publishes = built.map { case (name, df) =>
+      name -> (() => {
+        df.write.mode("overwrite").parquet(s"$outDir/$name")
+        spark.read.parquet(s"$outDir/$name").count()
+      })
+    } :+ ("dq_checks" -> (() => failedChecks.count()))
+    val counts = concurrently(publishes)
+    val violations = counts.last
     require(violations == 0, s"$violations data-quality checks failed")
-    counts
+    built.map(_._1).zip(counts).toMap
+  }
+
+  /** Runs every unit at once, one thread each, and returns their results
+    * in order. The threads are created on the calling thread, so they
+    * inherit its Spark local properties (job group, scheduler pool) and
+    * active session: their jobs are attributed to the caller. Returns or
+    * throws only after every unit has finished and its thread has ended;
+    * if any unit failed, rethrows the first failure in `units` order.
+    */
+  private def concurrently[T](units: Seq[(String, () => T)]): Seq[T] = {
+    val tasks = units.map { case (_, unit) => new FutureTask[T](() => unit()) }
+    val threads = units.zip(tasks).map { case ((name, _), task) =>
+      new Thread(task, s"Pipeline.run $name")
+    }
+    try threads.foreach(_.start())
+    finally threads.foreach(_.join())
+    tasks.map { t =>
+      try t.get() catch { case e: ExecutionException => throw e.getCause }
+    }
   }
 
   /** Materialize the cleaned, split-assigned training corpus partitioned
@@ -1089,23 +1128,16 @@ object Pipeline {
     // stamp, and ArtifactShelf.table fails loudly instead of letting a
     // gate silently emit wrong admissions. The fingerprint is internal
     // integrity (never oracle-compared), so xxhash64 is fine here.
-    // ONE read-back per relation computes count + fingerprint together
-    // (ArtifactShelf.stampOf — the r15 double-read fix).
-    def writeStamped(name: String, df: DataFrame): (String, Long, Long) = {
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
-      val (n, fp) = ArtifactShelf.stampOf(
-        spark.read.parquet(s"$outDir/$name"))
-      (name, n, fp)
-    }
     val perGroup = shelfGroups.map { g =>
       timed(g) {
         val (arts, splits) =
           shelfGroup(spark, sfDir, g, planes, kCells, lbl, mets)
-        (arts.map { case (name, df) => writeStamped(name, df) }, splits)
+        (arts.map { case (name, df) => writeStamped(spark, outDir, name, df) },
+          splits)
       }
     }
     val stamped = timed("finalize") {
-      perGroup.flatMap(_._1) :+ writeStamped("art_splits",
+      perGroup.flatMap(_._1) :+ writeStamped(spark, outDir, "art_splits",
         perGroup.flatMap(_._2).toDF("gate", "split_id"))
     }
     stamped.toDF("artifact", "n_rows", "fp")
@@ -1114,6 +1146,17 @@ object Pipeline {
       ("art_build_stamp" ->
         spark.read.parquet(s"$outDir/art_build_stamp").count())).toMap,
       timings.toMap)
+  }
+
+  /** Overwrites `$dir/$name` with `df` and stamps what landed: (name, row
+    * count, fingerprint) from ONE read-back (ArtifactShelf.stampOf — the
+    * r15 double-read fix); the stamp's count is the relation's count.
+    */
+  private def writeStamped(spark: SparkSession, dir: String, name: String,
+      df: DataFrame): (String, Long, Long) = {
+    df.write.mode("overwrite").parquet(s"$dir/$name")
+    val (n, fp) = ArtifactShelf.stampOf(spark.read.parquet(s"$dir/$name"))
+    (name, n, fp)
   }
 
   /** Sanctioned PER-GATE shelf refresh — the only way to partially
@@ -1145,15 +1188,11 @@ object Pipeline {
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val written = arts.map { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$shelfDir/$name")
-      name -> spark.read.parquet(s"$shelfDir/$name").count()
+      writeStamped(spark, shelfDir, name, df)
     }
-    val touched = arts.map(_._1) ++ (if (splitUpdates.isEmpty) Nil else {
-      (oldSplits ++ splitUpdates).toSeq.sortBy(_._1)
-        .toDF("gate", "split_id")
-        .write.mode("overwrite").parquet(s"$shelfDir/art_splits")
-      Seq("art_splits")
-    })
+    val touched = written ++ (if (splitUpdates.isEmpty) Nil else Seq(
+      writeStamped(spark, shelfDir, "art_splits",
+        (oldSplits ++ splitUpdates).toSeq.sortBy(_._1).toDF("gate", "split_id"))))
     // A full serve rebuild RETIRES the delta (r16) AND the tombstones
     // (r17): the refresh trains on the dir's corpus snapshot — which
     // includes previously-appended arrivals and no longer contains
@@ -1168,14 +1207,13 @@ object Pipeline {
         if (fs.exists(d)) { fs.delete(d, true); Seq(name) } else Nil
       }
     } else Nil
-    val newStamp = (oldStamp -- touched -- retired) ++ touched.map { n =>
-      n -> ArtifactShelf.stampOf(spark.read.parquet(s"$shelfDir/$n"))
-    }
+    val newStamp = (oldStamp -- touched.map(_._1) -- retired) ++
+      touched.map { case (n, c, f) => n -> ((c, f)) }
     newStamp.toSeq.sortBy(_._1)
       .map { case (n, (c, f)) => (n, c, f) }
       .toDF("artifact", "n_rows", "fp")
       .write.mode("overwrite").parquet(s"$shelfDir/art_build_stamp")
-    written.toMap
+    written.map { case (n, c, _) => n -> c }.toMap
   }
 
   def main(args: Array[String]): Unit = {

@@ -74,13 +74,16 @@ object KrogerIngest {
 
   /** S6/P9: flatten product payloads — items[0] struct access, categories
     * re-serialized to a JSON string, rows with no regular price skipped.
+    * A payload whose `items` is empty or null has no items[0]: it reads as
+    * a null item (`try_element_at`, which ANSI mode does not fail on) and
+    * is skipped by the same no-price filter.
     */
   def flattenProducts(raw: DataFrame): DataFrame =
     raw.select(
       col("productId").as("product_id"),
       col("description"), col("brand"),
       to_json(col("categories")).as("categories"),
-      element_at(col("items"), 1).as("item"),
+      try_element_at(col("items"), lit(1)).as("item"),
       current_timestamp().as("fetched_at"))
       .select(
         col("product_id"), col("description"), col("brand"), col("categories"),

@@ -107,6 +107,19 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(merged.head.getAs[String]("description") == "d1-new")
   }
 
+  test("kroger flatten: an empty or null items array skips the product, not the batch") {
+    import spark.implicits._
+    val json = Seq(
+      """{"productId":"p1","description":"d1","brand":"b1","categories":["produce"],"items":[{"itemId":"i1","size":"1lb","price":{"regular":3.5,"promo":null,"effectiveDate":{"value":"2026-01-01"},"expirationDate":null},"fulfillment":null,"inventory":null}]}""",
+      """{"productId":"p2","description":"d2","brand":"b2","categories":[],"items":[]}""",
+      """{"productId":"p3","description":"d3","brand":"b3","categories":[],"items":null}"""
+    ).toDF("value")
+    val flat = ops.KrogerIngest.flattenProducts(
+      ops.KrogerIngest.parseProducts(spark, json)).collect()
+    assert(flat.map(_.getAs[String]("product_id")).toSeq == Seq("p1"))
+    assert(flat.head.getAs[Double]("regular_price") == 3.5)
+  }
+
   test("upsert: incoming wins on an orderCol tie (REPLACE semantics)") {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
@@ -142,6 +155,82 @@ class ExtensionsSpec extends AnyFunSuite {
     Dashboard.renderAll(spark, sf, out).foreach { case (name, r) =>
       assert(r.isRight, s"$name degraded on healthy data: $r")
     }
+  }
+
+  test("Pipeline.run publishes every relation as its builder plans it") {
+    val out = java.nio.file.Files.createTempDirectory("graft_publish").toString
+    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    val counts = Pipeline.run(spark, sf, out, labels)
+    val layers = Pipeline.layers(spark, sf, labels)
+    assert(counts.keySet == layers.map(_._1).toSet)
+    layers.foreach { case (name, direct) =>
+      val published = spark.read.parquet(s"$out/$name")
+      assert(published.exceptAll(direct).isEmpty, s"$name has rows its builder does not")
+      assert(direct.exceptAll(published).isEmpty, s"$name lacks rows its builder has")
+      assert(counts(name) == published.count(), s"$name: returned count vs read-back")
+    }
+  }
+
+  test("Pipeline.run throws a failed layer's error only after every publish has ended") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    def publishThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("Pipeline.run "))
+    // The jobs of this test's group that the status store still shows as
+    // active, once it has seen a later sentinel job end.
+    def activeJobs(group: String): Set[Int] = {
+      val sentinel = s"end-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def sentinelDone = sc.statusTracker.getJobIdsForGroup(sentinel).exists(id =>
+        sc.statusTracker.getJobInfo(id)
+          .exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+      while (!sentinelDone && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelDone, "status store did not see the sentinel job end")
+      sc.statusTracker.getActiveJobIds.toSet intersect
+        sc.statusTracker.getJobIdsForGroup(group).toSet
+    }
+    // A layer's input is missing: a copy of the sf dir without documents.
+    val noDocs = Files.createTempDirectory("graft_nodocs")
+    Files.list(Paths.get(sf)).iterator().asScala
+      .filterNot(_.getFileName.toString == "documents.parquet")
+      .foreach(p => Files.createSymbolicLink(noDocs.resolve(p.getFileName), p))
+    val missing = intercept[Exception](Pipeline.run(spark, noDocs.toString,
+      Files.createTempDirectory("graft_nodocs_out").toString, labels))
+    assert(missing.getMessage.contains("documents.parquet"), missing.getMessage)
+    // Two publishes fail at run time, the later one in layer order on a
+    // label relation that raises: the earlier layer's error is thrown, and
+    // every other layer has still landed.
+    val out = Files.createTempDirectory("graft_fail_out")
+    Files.createSymbolicLink(out.resolve("mart_supplier_sales"), noDocs.resolve("absent/dir"))
+    val raising = labels.map(_.filter(raise_error(lit("labels unavailable")).isNull))
+    val group = s"publish-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "failing publish")
+    val first = try intercept[Exception](Pipeline.run(spark, sf, out.toString, raising))
+      finally sc.clearJobGroup()
+    assert(first.getMessage.contains("mart_supplier_sales"), first.getMessage)
+    assert(!first.getMessage.contains("labels unavailable"), first.getMessage)
+    Seq("dim_parts", "fact_prices", "mart_category_distribution",
+      "mart_price_by_category", "clean_documents").foreach { name =>
+      assert(Files.exists(out.resolve(s"$name/_SUCCESS")), s"$name did not land")
+    }
+    assert(publishThreads.isEmpty, s"publish threads alive: $publishThreads")
+    assert(activeJobs(group).isEmpty)
+  }
+
+  test("Pipeline.run's publish jobs carry the caller's job group") {
+    val out = java.nio.file.Files.createTempDirectory("graft_group").toString
+    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    val build = jobsRun {
+      Pipeline.layers(spark, sf, labels)
+      ops.Quality.dqChecks(spark, sf)
+    }
+    // Seven writes, seven read-back counts and the DQ gate's count.
+    val run = jobsRun(Pipeline.run(spark, sf, out, labels))
+    assert(run >= build + 15, s"run's group saw $run jobs, its plan building $build")
   }
 
   test("every chart degrades to its empty-state alert instead of throwing") {
@@ -261,6 +350,25 @@ class ExtensionsSpec extends AnyFunSuite {
     val out = publishMarts("graft_window")
     sameBoxData(Dashboard.chart1BoxData(spark, out, "1900-01-01", "1900-12-31"),
       Dashboard.boxData(Dashboard.priceFact(spark, out)))
+  }
+
+  test("renderAll at a chart-1 window equals the five render calls at that window") {
+    val out = publishMarts("graft_render_window")
+    val default = pageDigest(Dashboard.renderAll(spark, sf, out))
+    val pages = Seq(("1995-01-01", "1995-12-31"), ("1900-01-01", "1900-12-31")).map { case (from, to) =>
+      val page = Dashboard.renderAll(spark, sf, out, from, to)
+      val composed = Map(
+        "chart1_box" -> Dashboard.chart1BoxData(spark, out, from, to),
+        "chart2_geo" -> Dashboard.chart2GeoData(spark, sf, out),
+        "chart3_stock" -> Dashboard.chart3StockShare(spark, out),
+        "chart4_discount" -> Dashboard.chart4DiscountBar(spark, out),
+        "chart5_quadrant" -> Dashboard.chart5Quadrant(spark, out)
+      ).map { case (name, df) => name -> Dashboard.render(df, "empty", "failed") }
+      assert(page.values.forall(_.isRight), s"$from..$to degraded: $page")
+      assert(pageDigest(page) == pageDigest(composed), s"$from..$to")
+      pageDigest(page)
+    }
+    assert(pages.head("chart1_box") != default("chart1_box"), "the window did not reach chart 1")
   }
 
   test("concurrent first page loads agree") {
