@@ -145,7 +145,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional args: query names to bench in isolation (regression
     // adjudication — prints ALL per-run walls/CPUs, not just best-of-3,
     // and skips the sweep). "--sweep-n N" makes the no-arg sweep run each
@@ -180,25 +179,7 @@ object Bench {
     // to pay session startup + two calibration passes before erroring.
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r19: let AQE coalesce inside CACHED plans too (default false).
-      // The shared-subtree persists (r14/r18) otherwise materialize and
-      // re-scan at full shuffle-partition width regardless of size —
-      // measured at sf0.1 local[32]: 3–4× the executor CPU on every
-      // text-prep composite (keepbest 38–54 → 11.7 CPU-s, audit 47–49
-      // → 17, x_llm_corpus_prep 37–42 → ~10) with walls flat-to-better.
-      // Scale-correct, not a local[32] tune: AQE sizes partitions by
-      // advisory bytes, so corpus-scale cache builds keep parallelism.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // Executor CPU accounting: task-end events accumulate here; deltas
     // around each timed run give per-run CPU. The listener bus is async,
     // so each delta read waits a beat (outside the wall timer) for the

@@ -34,16 +34,7 @@ object BpeProbe {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("depth")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     mode match {
       case "depth" =>
         val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"

@@ -284,16 +284,7 @@ object Dashboard {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val martDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     Pipeline.run(spark, sfDir, martDir)
     charts(spark, sfDir, martDir).toSeq.sortBy(_._1).foreach { case (name, df) =>
       println(s"$name: ${df.count()} rows")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan for the given
   * query keys (or the Bench headline set by default) so partitioning /
   * pushdown / broadcast / codegen decisions can be reviewed.
@@ -12,14 +10,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val keys = if (args.length > 1) args.drop(1).toSeq else Bench.headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[4] keeps the printed plans comparable with PLANS.md's.
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       def show(df: org.apache.spark.sql.DataFrame): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end demo of the reference pipeline over its ACTUAL schema:
@@ -15,15 +14,7 @@ object KrogerDemo {
   def main(args: Array[String]): Unit = {
     val nProducts = args.headOption.map(_.toLong).getOrElse(2000L)
     val nLocations = if (args.length > 1) args(1).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val rawPrices = ops.KrogerDataGen.rawPrices(spark, nProducts, nLocations)
     val rawProducts = ops.KrogerDataGen.rawProducts(spark, nProducts)

@@ -388,16 +388,7 @@ object ScaleProbe {
       if (args.length > 3) args(3).split(",").toVector else defaults
     val unknown = probeSet.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     buildGrownDir(spark, base, work, nReplicas)
     def time(dir: String, name: String): (Double, Long) = {
       spark.catalog.clearCache()
@@ -440,38 +431,12 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_grownprobe"
     val nReplicas = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     buildGrownDir(spark, base, work, nReplicas)
     val kCells = if (args.length > 3) args(3).toInt
       else ext.Similarity.gridFor(
         Tables.embeddings(spark, work).count())._2
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    def time(f: => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Long, String) = {
-      spark.catalog.clearCache()
-      Thread.sleep(30)
-      val cpu0 = cpuNs.get()
-      val t0 = System.nanoTime()
-      val df = f
-      val n = df.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30)
-      val cpu = (cpuNs.get() - cpu0) / 1e9
-      (wall, cpu, n, Bench.joinStrategies(df))
-    }
+    val meter = new CpuMeter(spark)
     val wide = ext.Similarity.tablePlanesWide
     val arms = Seq(
       "curated" -> (() => ext.Similarity.xEmbCorpusPrepCurated(spark, work,
@@ -481,7 +446,8 @@ object ScaleProbe {
       "decon" -> (() => ext.Similarity.xEmbCorpusPrepDecon(spark, work,
         planes = wide, kCells = kCells)))
     val rows = arms.map { case (name, f) =>
-      val (w, c, n, p) = time(f())
+      val ((df, n), w, c) = meter.time { val df = f(); (df, df.count()) }
+      val p = Bench.joinStrategies(df)
       f""""$name":{"wall":$w%.2f,"cpu":$c%.2f,"rows":$n,"plans":"$p"}"""
     }
     println(rows.mkString("{\"prepknob\":{", ",",
@@ -502,50 +468,19 @@ object ScaleProbe {
   private def diffTailMain(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val shelf = if (args.length > 1) args(1) else "/tmp/graft_shelf_x1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    def time(f: => org.apache.spark.sql.DataFrame): (Double, Double, Long) = {
-      spark.catalog.clearCache()
-      Thread.sleep(30)
-      val cpu0 = cpuNs.get()
-      val t0 = System.nanoTime()
-      val rows = f.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30)
-      ((wall, (cpuNs.get() - cpu0) / 1e9, rows))
-    }
-    val (mw, mc, mn) = time(ext.CorpusPrep.diffFromArtifacts(spark, shelf))
-    val (cw, cc, cn) = time(
-      ext.CorpusPrep.contentDiffFromArtifacts(spark, dir, shelf))
+    val spark = Session.local(Session.cpus)
+    val meter = new CpuMeter(spark)
+    val (mn, mw, mc) = meter.time(
+      ext.CorpusPrep.diffFromArtifacts(spark, shelf).count())
+    val (cn, cw, cc) = meter.time(
+      ext.CorpusPrep.contentDiffFromArtifacts(spark, dir, shelf).count())
     println(f"""{"difftail":{"membership":{"wall":$mw%.2f,"cpu":$mc%.2f,"rows":$mn},"content":{"wall":$cw%.2f,"cpu":$cc%.2f,"rows":$cn}},"dir":"$dir","shelf":"$shelf","single_run":true}""")
     spark.stop()
   }
 
   private def serveCardMain(args: Array[String]): Unit = {
     val shelf = args.headOption.getOrElse("/tmp/graft_shelf_x1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val t0 = System.nanoTime()
     val card = ext.Similarity.serveIndexCard(spark, shelf).collect()
       .map(r => s""""${r.getString(0)}":${r.getLong(1)}""")
@@ -570,16 +505,7 @@ object ScaleProbe {
     val shelf = args.headOption.getOrElse("/tmp/graft_shelf_x1")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val nBatches = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val qs = Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
@@ -624,40 +550,16 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_grownprobe"
     val nReplicas = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     buildGrownDir(spark, base, work, nReplicas)
     val n = Tables.embeddings(spark, work).count()
     val cur = ext.Similarity.gridFor(n)._1
     val next = ext.Similarity.probeGridFor(n)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    def time(f: => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Long) = {
-      spark.catalog.clearCache()
-      Thread.sleep(30)
-      val cpu0 = cpuNs.get()
-      val t0 = System.nanoTime()
-      val rows = f.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30)
-      ((wall, (cpuNs.get() - cpu0) / 1e9, rows))
-    }
-    val (uw, uc, un) = time(
-      ext.Similarity.lshCleanPairsWith(spark, work, cur))
-    val (pw, pc, pn) = time(
-      ext.Similarity.lshCleanProbePairsWith(spark, work, next))
+    val meter = new CpuMeter(spark)
+    val (un, uw, uc) = meter.time(
+      ext.Similarity.lshCleanPairsWith(spark, work, cur).count())
+    val (pn, pw, pc) = meter.time(
+      ext.Similarity.lshCleanProbePairsWith(spark, work, next).count())
     println(f"""{"bandknob":{"unprobed_current":{"grid":"${cur.length}x${cur(0).length}","wall":$uw%.2f,"cpu":$uc%.2f,"pairs":$un},"probed_next":{"grid":"${next.length}x${next(0).length}","wall":$pw%.2f,"cpu":$pc%.2f,"pairs":$pn}},"n_vectors":$n,"replicas":$nReplicas,"single_run":true}""")
     spark.stop()
   }
@@ -684,16 +586,7 @@ object ScaleProbe {
     val nReplicas = if (args.length > 2) args(2).toInt else 100
     val grown = args.length > 3 && args(3) == "grown"
     val kAt: Option[Int] = if (args.length > 4) Some(args(4).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     if (grown) buildGrownDir(spark, base, work, nReplicas)
     else buildReplicaDir(spark, base, work, nReplicas)
     val shift = if (grown) 0L else idShift
@@ -739,40 +632,44 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_grown100"
     val nReplicas = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     buildGrownDir(spark, base, work, nReplicas)
     val (planes, kCells) = ext.Similarity.gridFor(
       Tables.embeddings(spark, work).count())
-    // Executor CPU alongside the wall (the bandknob listener): group
-    // walls swing ±2× run-to-run on this host, so a build-shape change
-    // adjudicates on CPU, not single-run walls (the sweep doctrine).
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    spark.catalog.clearCache()
-    Thread.sleep(30)
-    val cpu0 = cpuNs.get()
-    val t0 = System.nanoTime()
-    val (_, groups) = Pipeline.materializeFrozenArtifactsTimed(
-      spark, work, s"/tmp/graft_shelfbuild_x$nReplicas", planes, kCells)
-    val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(30)
-    val cpu = (cpuNs.get() - cpu0) / 1e9
+    // Executor CPU alongside the wall: group walls swing ±2× run-to-run
+    // on this host, so a build-shape change adjudicates on CPU, not
+    // single-run walls (the sweep doctrine).
+    val ((_, groups), wall, cpu) = new CpuMeter(spark).time(
+      Pipeline.materializeFrozenArtifactsTimed(
+        spark, work, s"/tmp/graft_shelfbuild_x$nReplicas", planes, kCells))
     println(f"""{"shelfbuild":{"wall":$wall%.1f,"cpu":$cpu%.1f,"groups":${groupsJson(groups)}},""" +
       s""""replicas":$nReplicas,"work_kcells":$kCells,""" +
       s""""grid":"${planes.length}x${planes(0).length}"}""")
     spark.stop()
+  }
+
+  /** Executor-CPU meter for the single-run probes (prepknob, difftail,
+    * bandknob, shelfbuild): one task-end listener accumulates CPU, and
+    * `time` returns (result, wall s, CPU s) for `body` run against a
+    * cleared cache. The listener bus is async, so each CPU read waits a
+    * beat outside the wall timer for the tail of events to drain.
+    */
+  private final class CpuMeter(spark: SparkSession) {
+    private val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
+    })
+    def time[T](body: => T): (T, Double, Double) = {
+      spark.catalog.clearCache()
+      Thread.sleep(30)
+      val cpu0 = cpuNs.get()
+      val t0 = System.nanoTime()
+      val r = body
+      val wall = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(30)
+      (r, wall, (cpuNs.get() - cpu0) / 1e9)
+    }
   }
 
   private def groupsJson(t: Map[String, Double]): String =
@@ -796,16 +693,7 @@ object ScaleProbe {
     // cost when each corpus runs its size-appropriate grid", which is
     // the production claim.
     val scaled = args.length > 3 && args(3) == "scaled"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // A work dir carrying a grown-corpus marker is used AS-IS: the
     // deployed shapes then measure the GROWTH regime (distinct
     // content) instead of replication — never overwrite a grown dir
@@ -1107,16 +995,7 @@ object ScaleProbe {
       val unknown = s -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     buildReplicaDir(spark, base, work, nReplicas)
 

@@ -15,21 +15,10 @@ import org.apache.spark.sql.SparkSession
 object GraftTest {
   val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Cached-plan AQE (r19, mirrors the Bench/Verify sessions): specs
-    // must exercise the persisted shared subtrees under the same
-    // partition-coalescing behavior the gate and bench run with.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // Session-scoped temp warehouse (the bucketed-join specs write
-    // managed tables) — never the repo checkout's ./spark-warehouse.
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // Session-scoped temp warehouse (the bucketed-join specs write
+  // managed tables) — never the repo checkout's ./spark-warehouse.
+  lazy val spark: SparkSession = Session.local(8, "spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString)
 
   // ONE frozen-artifact shelf build shared by every shelf-consuming
   // spec across all suites (the full shelf build runs every trainer

@@ -16,6 +16,10 @@ class IngestGateSpec extends AnyFunSuite {
   lazy val shelfDir: String = GraftTest.shelf._1
   lazy val shelfCounts: Map[String, Long] = GraftTest.shelf._2
 
+  /** Rows held across the query's state stores after its last batch. */
+  private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+
   test("one-topology ingest gate composes span-clean, screen, and mix from the shelf") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -144,8 +148,14 @@ class IngestGateSpec extends AnyFunSuite {
     query.processAllAvailable()
     input.addData(b2.toSeq)
     query.processAllAvailable()
+    val rowsIngested = stateRows(query)
     input.addData(arrivals.toSeq) // at-least-once replay
     query.processAllAvailable()
+    val rowsReplayed = stateRows(query)
+    assert(rowsIngested == arrivals.length && rowsReplayed == rowsIngested,
+      s"doc gate state must hold one row per ingested doc and a replay " +
+        s"must add none: $rowsIngested/$rowsReplayed rows for " +
+        s"${arrivals.length} docs")
     val streamed = spark.sql(
       """SELECT doc_id, lang, n_spans, n_removed, n_clean_tokens,
         |  clean_hash, n_hub_flags, n_winnow_flags, mix_kept, sampled,
@@ -357,19 +367,27 @@ class IngestGateSpec extends AnyFunSuite {
     def runStream[T <: AnyRef : org.apache.spark.sql.Encoder](name: String,
         mk: org.apache.spark.sql.Dataset[streaming.StreamOps.VecIn]
           => org.apache.spark.sql.Dataset[T],
-        replay: Boolean): Unit = {
+        replay: Boolean): (Long, Long) = {
       val input = MemoryStream[streaming.StreamOps.VecIn]
       val query = mk(input.toDS())
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       input.addData(b1.toSeq); query.processAllAvailable()
       input.addData(b2.toSeq); query.processAllAvailable()
+      val rowsIngested = stateRows(query)
       if (replay) { input.addData(b1.toSeq); query.processAllAvailable() }
+      val rowsReplayed = stateRows(query)
       query.stop()
+      (rowsIngested, rowsReplayed)
     }
-    runStream("vec_ingest_out",
+    val (rowsIngested, rowsReplayed) = runStream("vec_ingest_out",
       ds => streaming.StreamOps.ingestVectors(ds, cents, cbs, evalIndex),
       replay = true)
+    val distinctContents = arrivals.map(_.embedding.toSeq).distinct.length
+    assert(rowsIngested == distinctContents && rowsReplayed == rowsIngested,
+      s"vector gate state must hold one row per distinct content and a " +
+        s"replay must add none: $rowsIngested/$rowsReplayed rows for " +
+        s"$distinctContents distinct contents")
     val streamed = spark.sql(
       """SELECT vec_id, keeper_id, is_dup, cell, codes, sq8_codes, n_flags,
         |  admitted
