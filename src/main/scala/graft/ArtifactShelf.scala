@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.math.{BigDecimal, BigInteger}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Typed READERS for the frozen-artifact shelf
   * `Pipeline.materializeFrozenArtifacts` writes — the consuming half of
@@ -22,14 +24,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ArtifactShelf {
 
-  /** Order-independent content fingerprint of an artifact relation:
-    * the wrapping Long sum of xxhash64 over every row (all columns).
-    * Internal INTEGRITY only — never oracle-compared — so the
-    * non-portable xxhash64 is the right tool (one codegen'd pass, no
-    * sort). Used by the build stamp and the load-time skew check.
-    */
-  private[graft] def fingerprint(df: DataFrame): Long = stampOf(df)._2
-
   /** (row count, fingerprint) in ONE scan — the stamp builders and the
     * load-time check both need the pair, and reading the relation twice
     * (count, then fingerprint) doubled stamp I/O for no reason (the r15
@@ -37,18 +31,78 @@ object ArtifactShelf {
     * the fingerprint the wrapping sum of per-row xxhash64.
     */
   private[graft] def stampOf(df: DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    // Sum in DECIMAL(38,0) — a raw long sum of ±2⁶³-range hashes
-    // overflows under ANSI arithmetic; 38 digits hold millions of
-    // them exactly — then fold to a long on the driver.
-    val h = df.select(xxhash64(df.columns.map(col): _*)
-        .cast("decimal(38,0)").as("h"))
-      .agg(count(lit(1)), sum("h")).head()
-    val fp = if (h.isNullAt(1)) 0L
-    else h.getDecimal(1).toBigInteger
-      .mod(java.math.BigInteger.valueOf(Long.MaxValue)).longValueExact()
-    (h.getLong(0), fp)
+    val (n, h) = stampAggs(df)
+    val r = df.agg(n, h).head()
+    (r.getLong(0), fold(r.getDecimal(1)))
   }
+
+  /** Overwrites `path` with `df` and returns its (row count,
+    * fingerprint) — the [[stampOf]] pair of what landed — observed on
+    * the write job itself, so a publish runs no read-back job.
+    */
+  private[graft] def publish(df: DataFrame, path: String): (Long, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val (n, h) = stampAggs(df)
+    df.observe(obs, n, h).write.mode("overwrite").parquet(path)
+    val m = obs.get
+    (m("n").asInstanceOf[Long], fold(m("h").asInstanceOf[BigDecimal]))
+  }
+
+  // Sum in DECIMAL(38,0) — a raw long sum of ±2⁶³-range hashes
+  // overflows under ANSI arithmetic; 38 digits hold millions of them
+  // exactly — then fold to a long on the driver (no rows folds to 0).
+  private def stampAggs(df: DataFrame): (Column, Column) = {
+    import org.apache.spark.sql.functions._
+    (count(lit(1)).as("n"),
+      sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")).as("h"))
+  }
+
+  private def fold(sum: BigDecimal): Long = if (sum == null) 0L
+    else sum.toBigInteger.mod(BigInteger.valueOf(Long.MaxValue)).longValueExact()
+
+  /** A build stamp: artifact → (row count, fingerprint). */
+  private[graft] type Stamp = Map[String, (Long, Long)]
+  private[graft] val StampName = "art_build_stamp"
+
+  /** Serializes stamp writes in this JVM: interleaved read-modify-writes
+    * would write each other's rows stale (cross-process: out of contract).
+    */
+  private val stampLock = new Object
+
+  /** The stamp `shelfDir`'s build recorded. */
+  private[graft] def stamp(spark: SparkSession, shelfDir: String): Stamp =
+    spark.read.parquet(s"$shelfDir/$StampName").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+
+  /** Writes `stamp` whole, sorted by artifact. */
+  private[graft] def writeStamp(spark: SparkSession, shelfDir: String,
+      stamp: Stamp): Unit = stampLock.synchronized {
+    import spark.implicits._
+    stamp.toSeq.sortBy(_._1).map { case (a, (n, fp)) => (a, n, fp) }
+      .toDF("artifact", "n_rows", "fp")
+      .write.mode("overwrite").parquet(s"$shelfDir/$StampName")
+  }
+
+  /** The one stamp read-modify-write: under the lock, reads the stamp,
+    * runs `update` (which may write artifacts), writes what it returns.
+    */
+  private[graft] def restamp[T](spark: SparkSession, shelfDir: String)(
+      update: Stamp => (Stamp, T)): T = stampLock.synchronized {
+    val (next, result) = update(stamp(spark, shelfDir))
+    writeStamp(spark, shelfDir, next)
+    result
+  }
+
+  /** Deletes the serve delta and tombstones, which a rebuilt or folded
+    * base already holds; returns the names it deleted.
+    */
+  private[graft] def retireServe(spark: SparkSession,
+      shelfDir: String): Seq[String] =
+    Seq("art_serve_delta", "art_serve_tombstones").filter { name =>
+      val d = new org.apache.hadoop.fs.Path(s"$shelfDir/$name")
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.exists(d) && fs.delete(d, true)
+    }
 
   /** A DataFrame-shaped artifact, as written — VERIFIED against the
     * shelf's build stamp before it is handed to a gate: a shelf whose
@@ -62,11 +116,8 @@ object ArtifactShelf {
     */
   def table(spark: SparkSession, shelfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$shelfDir/$name")
-    if (name != "art_build_stamp") {
-      val stamp = spark.read.parquet(s"$shelfDir/art_build_stamp")
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
-        .toMap
-      val (wantN, wantFp) = stamp.getOrElse(name, throw new
+    if (name != StampName) {
+      val (wantN, wantFp) = stamp(spark, shelfDir).getOrElse(name, throw new
         IllegalStateException(s"shelf artifact unstamped: $name at " +
           s"$shelfDir is not in art_build_stamp — not written by the " +
           "shelf build that stamped this directory"))

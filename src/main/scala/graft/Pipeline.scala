@@ -50,8 +50,9 @@ object Pipeline {
   /** Build + materialize every layer; returns the mart row counts.
     *
     * The layers are independent (dbt runs such models on parallel
-    * threads), so their publishes run at once: each relation's write and
-    * read-back count, and the DQ gate's count, on a thread of its own.
+    * threads), so their publishes run at once: each relation's counted
+    * write (ArtifactShelf.publish) and the DQ gate's count, each on a
+    * thread of its own.
     * The plans are built here, on the calling thread. The DQ `require`
     * runs once every write has landed.
     */
@@ -61,10 +62,7 @@ object Pipeline {
     val failedChecks = ops.Quality.dqChecks(spark, sfDir)
       .filter(col("n_violations") > 0)
     val publishes = built.map { case (name, df) =>
-      name -> (() => {
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-        spark.read.parquet(s"$outDir/$name").count()
-      })
+      name -> (() => ArtifactShelf.publish(df, s"$outDir/$name")._1)
     } :+ ("dq_checks" -> (() => failedChecks.count()))
     val counts = concurrently(publishes)
     val violations = counts.last
@@ -229,13 +227,11 @@ object Pipeline {
       outDir: String,
       planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,
       kCells: Int = 16): String = {
-    import spark.implicits._
     val verdDir = s"$outDir/prep_verdicts"
-    val names = (ext.CorpusPrep.prepVerdictRelations(spark, sfDir) ++
+    val stamped = (ext.CorpusPrep.prepVerdictRelations(spark, sfDir) ++
       ext.Similarity.embPrepVerdictRelations(spark, sfDir, planes, kCells))
       .map { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$verdDir/$name")
-        name
+        name -> ArtifactShelf.publish(df, s"$verdDir/$name")
       }
     // The build STAMP — the r12 shelf guard extended to the one
     // artifact family that had escaped it (the r14 verdict's gap #1):
@@ -245,12 +241,7 @@ object Pipeline {
     // (partial rebuild, mixed-version deploy) would feed
     // auditFromArtifacts a silently wrong attribution; the stamped
     // load (ArtifactShelf.table) fails loudly instead.
-    names.map { name =>
-      val (n, fp) = ArtifactShelf.stampOf(
-        spark.read.parquet(s"$verdDir/$name"))
-      (name, n, fp)
-    }.toDF("artifact", "n_rows", "fp")
-      .write.mode("overwrite").parquet(s"$verdDir/art_build_stamp")
+    ArtifactShelf.writeStamp(spark, verdDir, stamped.toMap)
     verdDir
   }
 
@@ -640,38 +631,19 @@ object Pipeline {
     * primitive. Returns the compacted base's row count.
     */
   def compactServeIndex(spark: SparkSession, shelfDir: String): Long = {
-    import spark.implicits._
-    // Same-JVM mutual exclusion with the append tails (stampLock —
-    // see appendIndexBatch's concurrency note): a delta/tombstone
-    // append interleaving with the fold would commit into a relation
-    // being deleted or restamp against the half-rewritten base.
-    stampLock.synchronized {
+    // The fold holds the stamp lock: an interleaved append would commit
+    // into a relation being deleted or restamp the half-rewritten base.
+    ArtifactShelf.restamp(spark, shelfDir) { old =>
     // The exact serving union, loaded through the stamp guard (a
     // skewed shelf must fail loudly BEFORE its fold becomes the new
     // base), pinned eagerly: the write below overwrites the very
     // relation the lazy plan would re-read.
     val folded = ext.Similarity.annServeStateFromArtifacts(spark, shelfDir)
       ._2.localCheckpoint()
-    val n = folded.count()
-    folded.write.mode("overwrite")
-      .parquet(s"$shelfDir/art_serve_inverted")
-    val retired = Seq("art_serve_delta", "art_serve_tombstones")
-      .filter { name =>
-        val d = new org.apache.hadoop.fs.Path(s"$shelfDir/$name")
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(d)) { fs.delete(d, true); true } else false
-      }
-    val newStamp = spark.read.parquet(s"$shelfDir/art_build_stamp")
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      .--(retired)
-      .updated("art_serve_inverted", ArtifactShelf.stampOf(
-        spark.read.parquet(s"$shelfDir/art_serve_inverted")))
-    newStamp.toSeq.sortBy(_._1)
-      .map { case (name, (c, f)) => (name, c, f) }
-      .toDF("artifact", "n_rows", "fp")
-      .write.mode("overwrite").parquet(s"$shelfDir/art_build_stamp")
-    n
+    val receipt = ArtifactShelf.publish(folded,
+      s"$shelfDir/art_serve_inverted")
+    val retired = ArtifactShelf.retireServe(spark, shelfDir)
+    (old -- retired + ("art_serve_inverted" -> receipt), receipt._1)
     }
   }
 
@@ -700,7 +672,6 @@ object Pipeline {
   private def appendIndexBatch(spark: SparkSession, shelfDir: String,
       artifact: String, rows: DataFrame, id: String,
       guardIds: Option[String]): Long = {
-    import spark.implicits._
     val path = s"$shelfDir/$artifact"
     // The id becomes a batch_id=<id> partition VALUE that the
     // incremental restamp reads back standalone: an id Spark's
@@ -716,18 +687,8 @@ object Pipeline {
         "that partition-type-infers as int/decimal/date reads back " +
         "differently under single-partition vs full-relation scans, " +
         "breaking the composed stamp)")
-    // The guard + commit + restamp run under ONE JVM-level lock
-    // (r18): the delta and tombstone STREAMS legitimately run
-    // concurrently against one shelf (serveDeltaStream +
-    // serveTombstoneStream — both foreachBatch bodies execute on this
-    // driver), and the restamp is a read-modify-write of the whole
-    // stamp relation — two interleaved appends would each write the
-    // OTHER artifact's stamp row stale (a lost update that fails every
-    // subsequent load on a healthy shelf). Cross-PROCESS concurrent
-    // appenders remain out of contract (the atomic-rename commit keeps
-    // them from corrupting data, but their restamps can still race —
-    // a multi-writer deployment serializes appends upstream).
-    stampLock.synchronized {
+    // Guard + commit + restamp hold the stamp lock (concurrent streams).
+    ArtifactShelf.restamp(spark, shelfDir) { old =>
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val isReplay = fs.exists(
@@ -778,35 +739,22 @@ object Pipeline {
     // repairing a crash between a committed rename and the restamp,
     // where the old stamp row is stale and composition would bake the
     // staleness in. Composed == full-scan is spec-pinned.
-    val old = spark.read.parquet(s"$shelfDir/art_build_stamp")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val (n, fp) = if (isReplay || !committed)
       ArtifactShelf.stampOf(spark.read.parquet(path))
     else {
       val (bn, bfp) = ArtifactShelf.stampOf(
         spark.read.option("basePath", path)
           .parquet(s"$path/batch_id=$id"))
-      val (on, ofp) = old.find(_._1 == artifact)
-        .map(r => (r._2, r._3)).getOrElse((0L, 0L))
+      val (on, ofp) = old.getOrElse(artifact, (0L, 0L))
       (on + bn,
         java.math.BigInteger.valueOf(ofp)
           .add(java.math.BigInteger.valueOf(bfp))
           .mod(java.math.BigInteger.valueOf(Long.MaxValue))
           .longValueExact())
     }
-    (old.filterNot(_._1 == artifact).toSeq :+ ((artifact, n, fp)))
-      .sortBy(_._1)
-      .toDF("artifact", "n_rows", "fp")
-      .write.mode("overwrite").parquet(s"$shelfDir/art_build_stamp")
-    n
+    (old.updated(artifact, (n, fp)), n)
     }
   }
-
-  /** Serializes every stamp read-modify-write in this JVM — the
-    * append tails and the compaction fold (see appendIndexBatch's
-    * concurrency note).
-    */
-  private val stampLock = new Object
 
   /** Staged-write + atomic-rename commit of one signature batch; returns
     * false (a no-op) when the batch directory already exists — either a
@@ -1102,11 +1050,7 @@ object Pipeline {
     // the rebuilt base indexes this corpus snapshot — a leftover delta
     // would double-index, leftover tombstones would re-hide; and the
     // fresh stamp would orphan them into loud load failures anyway).
-    Seq("art_serve_delta", "art_serve_tombstones").foreach { name =>
-      val d = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(d)) fs.delete(d, true)
-    }
+    ArtifactShelf.retireServe(spark, outDir)
     // ONE near-dup label pass for the whole build (diff + span groups'
     // trainingCorpus chains consume it — the Pipeline.run discipline).
     // localCheckpoint is eager, so the chain's cost lands here.
@@ -1132,31 +1076,17 @@ object Pipeline {
       timed(g) {
         val (arts, splits) =
           shelfGroup(spark, sfDir, g, planes, kCells, lbl, mets)
-        (arts.map { case (name, df) => writeStamped(spark, outDir, name, df) },
-          splits)
+        (arts.map { case (name, df) =>
+          name -> ArtifactShelf.publish(df, s"$outDir/$name") }, splits)
       }
     }
     val stamped = timed("finalize") {
-      perGroup.flatMap(_._1) :+ writeStamped(spark, outDir, "art_splits",
-        perGroup.flatMap(_._2).toDF("gate", "split_id"))
+      perGroup.flatMap(_._1) :+ ("art_splits" -> ArtifactShelf.publish(
+        perGroup.flatMap(_._2).toDF("gate", "split_id"), s"$outDir/art_splits"))
     }
-    stamped.toDF("artifact", "n_rows", "fp")
-      .write.mode("overwrite").parquet(s"$outDir/art_build_stamp")
-    ((stamped.map { case (name, n, _) => name -> n } :+
-      ("art_build_stamp" ->
-        spark.read.parquet(s"$outDir/art_build_stamp").count())).toMap,
-      timings.toMap)
-  }
-
-  /** Overwrites `$dir/$name` with `df` and stamps what landed: (name, row
-    * count, fingerprint) from ONE read-back (ArtifactShelf.stampOf — the
-    * r15 double-read fix); the stamp's count is the relation's count.
-    */
-  private def writeStamped(spark: SparkSession, dir: String, name: String,
-      df: DataFrame): (String, Long, Long) = {
-    df.write.mode("overwrite").parquet(s"$dir/$name")
-    val (n, fp) = ArtifactShelf.stampOf(spark.read.parquet(s"$dir/$name"))
-    (name, n, fp)
+    ArtifactShelf.writeStamp(spark, outDir, stamped.toMap)
+    ((stamped.map { case (name, (n, _)) => name -> n } :+
+      (ArtifactShelf.StampName -> stamped.size.toLong)).toMap, timings.toMap)
   }
 
   /** Sanctioned PER-GATE shelf refresh — the only way to partially
@@ -1184,36 +1114,21 @@ object Pipeline {
     // path being rewritten would race the delete).
     val oldSplits = spark.read.parquet(s"$shelfDir/art_splits").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val oldStamp = spark.read.parquet(s"$shelfDir/art_build_stamp")
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val written = arts.map { case (name, df) =>
-      writeStamped(spark, shelfDir, name, df)
+      name -> ArtifactShelf.publish(df, s"$shelfDir/$name")
     }
     val touched = written ++ (if (splitUpdates.isEmpty) Nil else Seq(
-      writeStamped(spark, shelfDir, "art_splits",
-        (oldSplits ++ splitUpdates).toSeq.sortBy(_._1).toDF("gate", "split_id"))))
-    // A full serve rebuild RETIRES the delta (r16) AND the tombstones
-    // (r17): the refresh trains on the dir's corpus snapshot — which
-    // includes previously-appended arrivals and no longer contains
-    // removed vectors — so keeping art_serve_delta would double-index
-    // the arrivals and keeping art_serve_tombstones would re-hide ids
-    // a future corpus version may legitimately reuse. Delete both and
-    // drop their stamp rows with the same restamp.
-    val retired: Seq[String] = if (group == "serve") {
-      Seq("art_serve_delta", "art_serve_tombstones").flatMap { name =>
-        val d = new org.apache.hadoop.fs.Path(s"$shelfDir/$name")
-        val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(d)) { fs.delete(d, true); Seq(name) } else Nil
-      }
-    } else Nil
-    val newStamp = (oldStamp -- touched.map(_._1) -- retired) ++
-      touched.map { case (n, c, f) => n -> ((c, f)) }
-    newStamp.toSeq.sortBy(_._1)
-      .map { case (n, (c, f)) => (n, c, f) }
-      .toDF("artifact", "n_rows", "fp")
-      .write.mode("overwrite").parquet(s"$shelfDir/art_build_stamp")
-    written.map { case (n, c, _) => n -> c }.toMap
+      "art_splits" -> ArtifactShelf.publish((oldSplits ++ splitUpdates).toSeq
+        .sortBy(_._1).toDF("gate", "split_id"), s"$shelfDir/art_splits")))
+    // The stamp is read only now, under the stamp lock, so an append that
+    // restamped during the writes keeps its row. A serve rebuild retires
+    // the delta and tombstones: it trains on the dir's corpus snapshot.
+    ArtifactShelf.restamp(spark, shelfDir) { old =>
+      val retired =
+        if (group == "serve") ArtifactShelf.retireServe(spark, shelfDir) else Nil
+      (old -- retired ++ touched, ())
+    }
+    written.map { case (n, (c, _)) => n -> c }.toMap
   }
 
   def main(args: Array[String]): Unit = {

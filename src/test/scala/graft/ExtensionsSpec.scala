@@ -228,9 +228,35 @@ class ExtensionsSpec extends AnyFunSuite {
       Pipeline.layers(spark, sf, labels)
       ops.Quality.dqChecks(spark, sf)
     }
-    // Seven writes, seven read-back counts and the DQ gate's count.
+    // Seven writes, each counted by its own write job, and the DQ gate's count.
     val run = jobsRun(Pipeline.run(spark, sf, out, labels))
-    assert(run >= build + 15, s"run's group saw $run jobs, its plan building $build")
+    assert(run >= build + 8, s"run's group saw $run jobs, its plan building $build")
+  }
+
+  test("ArtifactShelf.publish's receipt is stampOf of the relation it wrote") {
+    import spark.implicits._
+    // The skew guard compares a stamp recorded from the write job with
+    // stampOf over the parquet a load reads back: the two must agree on
+    // empty relations, on the doubles parquet keeps bit-exact (-0.0, NaN,
+    // null) and on array columns like art_serve_inverted's v2 and cc.
+    val dir = java.nio.file.Files.createTempDirectory("graft_receipt").toString
+    val empty = spark.range(8).repartition(3).filter(col("id") < 0).toDF()
+    val doubles = Seq(Some(-0.0), Some(0.0), Some(Double.NaN), None, Some(1.5))
+      .toDF("x")
+    val arrays = Seq(
+      (0, 7L, Some(Seq(0.25f, -0.0f)), 2.0, Seq(4L, -5L)),
+      (3, 8L, Some(Seq.empty[Float]), Double.NaN, Seq.empty[Long]),
+      (3, 9L, None, 0.5, Seq(Long.MinValue)))
+      .toDF("cell", "id2", "v2", "n2", "cc")
+    val receipts = Seq("empty" -> empty, "doubles" -> doubles, "arrays" -> arrays)
+      .map { case (name, df) =>
+        val receipt = ArtifactShelf.publish(df, s"$dir/$name")
+        assert(receipt == ArtifactShelf.stampOf(spark.read.parquet(s"$dir/$name")),
+          s"$name: publish receipt vs stampOf of the read-back")
+        name -> receipt
+      }.toMap
+    assert(receipts("empty") == ((0L, 0L)))
+    assert(receipts("doubles")._1 == 5L && receipts("arrays")._1 == 3L)
   }
 
   test("every chart degrades to its empty-state alert instead of throwing") {

@@ -967,6 +967,38 @@ class ObservabilitySpec extends AnyFunSuite {
       "served state after concurrent appends must fold both batches")
   }
 
+  test("a group refresh beside a delta append keeps both stamp rows full-scan-exact, every load passes") {
+    import spark.implicits._
+    // refreshShelfGroup reads the stamp only inside its restamp, under the
+    // stamp lock, after its artifact writes. An append that restamps
+    // while the refresh is writing must keep its row: a refresh that read
+    // the stamp before its writes would rewrite the delta's row stale,
+    // and every later load of the delta would fail with version skew.
+    // Like the append race above, this catches that regression
+    // nondeterministically: only when the append lands inside the
+    // refresh's window.
+    val dir = GraftTest.copyShelf("shelf_refresh_race")
+    val baseMax = spark.read.parquet(s"$dir/art_serve_inverted")
+      .agg(max(col("id2"))).head().getLong(0)
+    val deltaRows = (1L to 6L).map { i =>
+      ((i % 7).toInt, baseMax + i, Seq(0.3f, 0.4f), 2.0, Seq(4L, 5L))
+    }.toDF("cell", "id2", "v2", "n2", "cc").localCheckpoint()
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def runner(f: => Unit) = new Thread(() =>
+      try f catch { case t: Throwable => errs.add(t) })
+    val refresh = runner { Pipeline.refreshShelfGroup(spark, sf, dir, "mix"); () }
+    val append = runner { Pipeline.appendServeDelta(spark, dir, deltaRows); () }
+    refresh.start(); append.start(); refresh.join(); append.join()
+    assert(errs.isEmpty, s"refresh or append threw: ${errs.peek()}")
+    val stamps = ArtifactShelf.stamp(spark, dir)
+    for (a <- Seq("art_mix_cuts", "art_serve_delta")) {
+      assert(stamps.get(a) ==
+        Some(ArtifactShelf.stampOf(spark.read.parquet(s"$dir/$a"))),
+        s"$a stamp row lost or stale after a refresh beside an append")
+    }
+    stamps.keys.foreach(a => ArtifactShelf.table(spark, dir, a).count())
+  }
+
   test("serve-index card tracks populations and occupancy through the lifecycle; compaction zeroes the versioned relations") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
