@@ -60,6 +60,14 @@ object ArtifactShelf {
   private def fold(sum: BigDecimal): Long = if (sum == null) 0L
     else sum.toBigInteger.mod(BigInteger.valueOf(Long.MaxValue)).longValueExact()
 
+  /** The stamp of two disjoint relations' union: counts add and
+    * fingerprints add under the same wrapping sum, so an append derives
+    * the relation's new stamp without rescanning what was there.
+    */
+  private[graft] def addStamps(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+    (a._1 + b._1, fold(new BigDecimal(
+      BigInteger.valueOf(a._2).add(BigInteger.valueOf(b._2)))))
+
   /** A build stamp: artifact → (row count, fingerprint). */
   private[graft] type Stamp = Map[String, (Long, Long)]
   private[graft] val StampName = "art_build_stamp"

@@ -180,17 +180,9 @@ object Bench {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local(Session.cpus)
-    // Executor CPU accounting: task-end events accumulate here; deltas
-    // around each timed run give per-run CPU. The listener bus is async,
-    // so each delta read waits a beat (outside the wall timer) for the
-    // tail of events to drain — a straggling event bleeding into the
-    // next query would be a fraction of a task, noise-level.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    def cpuNow(): Long = { Thread.sleep(30); cpuNs.get() }
+    // Executor CPU per timed run; a straggling task-end event bleeding
+    // into the next query would be a fraction of a task, noise-level.
+    val meter = new CpuMeter(spark)
     // JVM / codegen warm-up on a small query so the first timed query
     // doesn't pay one-time class-loading cost.
     try SparkEntry.queries("a6_twokey_count")(spark, sfDir).count()
@@ -207,18 +199,15 @@ object Bench {
       // cleared before each timed run so intra-query persist() still works
       // but nothing is served warm from a previous run or query.
       val runs = (1 to (if (only.nonEmpty) nRuns else 3)).map { _ =>
-        spark.catalog.clearCache()
-        val cpu0 = cpuNow()
-        val t0 = System.nanoTime()
-        try { val df = fn(spark, sfDir); df.count(); lastDf = df }
-        catch { case e: Throwable =>
-          if (!failed.contains(name)) {
-            failed ::= name
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        val (_, wall, cpu) = meter.time {
+          try { val df = fn(spark, sfDir); df.count(); lastDf = df }
+          catch { case e: Throwable =>
+            if (!failed.contains(name)) {
+              failed ::= name
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            }
           }
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (cpuNow() - cpu0) / 1e9
         (wall, cpu)
       }
       if (only.nonEmpty)
@@ -264,14 +253,12 @@ object Bench {
     val sweepConfirmMaxWall = 8.0
     val sweep = sweepNames.map { name =>
       def run(): (Double, Double, String) = {
-        spark.catalog.clearCache()
-        val cpu0 = cpuNow()
-        val t0 = System.nanoTime()
         try {
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          df.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val cpu = (cpuNow() - cpu0) / 1e9
+          val (df, wall, cpu) = meter.time {
+            val df = SparkEntry.queries(name)(spark, sfDir)
+            df.count()
+            df
+          }
           // join strategies recorded for the sweep too: single-run walls
           // are too noisy to gate on, but a plan flip IS adjudicable.
           (wall, cpu, try joinStrategies(df) catch { case _: Throwable => "" })

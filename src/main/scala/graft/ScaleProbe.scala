@@ -648,30 +648,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** Executor-CPU meter for the single-run probes (prepknob, difftail,
-    * bandknob, shelfbuild): one task-end listener accumulates CPU, and
-    * `time` returns (result, wall s, CPU s) for `body` run against a
-    * cleared cache. The listener bus is async, so each CPU read waits a
-    * beat outside the wall timer for the tail of events to drain.
-    */
-  private final class CpuMeter(spark: SparkSession) {
-    private val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
-    })
-    def time[T](body: => T): (T, Double, Double) = {
-      spark.catalog.clearCache()
-      Thread.sleep(30)
-      val cpu0 = cpuNs.get()
-      val t0 = System.nanoTime()
-      val r = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(30)
-      (r, wall, (cpuNs.get() - cpu0) / 1e9)
-    }
-  }
-
   private def groupsJson(t: Map[String, Double]): String =
     t.toSeq.sortBy(-_._2)
       .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
@@ -750,7 +726,7 @@ object ScaleProbe {
     def dag(dir: String, out: String,
         planes: Array[Array[Array[Double]]], kCells: Int): Double = {
       val (_, t) = timed {
-        val labels = Some(Pipeline.nearDupLabels(spark, dir))
+        val labels = Some(ext.Dedup.nearDupLabels(spark, dir))
         Pipeline.run(spark, dir, out, labels)
         Pipeline.materializeTrainingCorpus(spark, dir, out, labels)
         Pipeline.materializeVectorCorpus(spark, dir, out, planes, kCells)

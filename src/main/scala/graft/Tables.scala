@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.expr
 
 /** Readers for the driver-generated testdata tables (see TESTDATA.md /
   * FIXTURES.md §B). Each table is a single parquet file per scale factor;
@@ -62,6 +63,16 @@ object Tables {
     if (df.rdd.getNumPartitions < sc.defaultParallelism)
       df.repartition(sc.defaultParallelism)
     else df
+  }
+
+  /** The train-once admission split, the one place it is written: ids
+    * below `(max(idCol) + 1) div 2` are the admitted (training) half,
+    * the rest arrive after it. 0 on an empty relation, so both halves
+    * are empty.
+    */
+  private[graft] def admissionSplit(df: DataFrame, idCol: String): Long = {
+    val r = df.agg(expr(s"(max($idCol) + 1) div 2")).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

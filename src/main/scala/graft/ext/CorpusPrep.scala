@@ -102,11 +102,7 @@ object CorpusPrep {
       precomputedMetrics: Option[(DataFrame, DataFrame, DataFrame)] = None)
       : DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val labels = precomputedLabels.getOrElse {
-      val pairs = Dedup.ngramJaccardPairs(spark, dir)
-        .filter(col("jaccard") >= 0.5).select("d1", "d2")
-      Dedup.connectedComponents(pairs)._1
-    }
+    val labels = precomputedLabels.getOrElse(Dedup.nearDupLabels(spark, dir))
     val (lang, qual0, cont) = precomputedMetrics.getOrElse(
       prepDocMetrics(spark, dir))
     // r18: the keep-best retention reads the quality relation a second
@@ -425,9 +421,7 @@ object CorpusPrep {
   private[graft] def prepVerdictRelations(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     val docs = Tables.documents(spark, dir)
-    val pairs = Dedup.ngramJaccardPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val labels = Dedup.connectedComponents(pairs)._1
+    val labels = Dedup.nearDupLabels(spark, dir)
     // r18 (guide §2.4): two chains previously executed twice across the
     // verdict relations — the winnow pair chain (substring-dup AND the
     // screen's centrality edges) and the quality relation (doc-score
@@ -527,9 +521,7 @@ object CorpusPrep {
     // outright). The label chain's own checkpoint is per-invocation:
     // every run still computes from the parquet inputs, nothing
     // crosses runs.
-    val pairs = Dedup.ngramJaccardPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val labels = Some(Dedup.connectedComponents(pairs)._1)
+    val labels = Some(Dedup.nearDupLabels(spark, dir))
     val (lang, qual, cont) = prepDocMetrics(spark, dir)
     // persist, not localCheckpoint: lazy, so the shared subtrees still
     // execute inside the one final job (no serialized materialization

@@ -178,6 +178,8 @@ object Dedup {
       .select(col("d1"), col("d2"), col("inter_grams"),
         round(col("jaccard"), 6).as("jaccard"))
 
+  private val ccMaxRounds = 64
+
   /** Connected components over undirected candidate edges via alternating
     * large-star / small-star contraction (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC '14). Each large-star links
@@ -194,19 +196,12 @@ object Dedup {
     * are dropped explicitly (GraftSqlBridge.dropCheckpointBlocks — a
     * plain Dataset.unpersist would leave localCheckpoint blocks to the
     * lazy ContextCleaner), keeping executor memory O(one edge set).
-    * `checkpointDir`, when given, switches localCheckpoint (fine in local
-    * mode, which has no executor loss to survive) to a RELIABLE
-    * checkpoint written under that directory — the multi-executor cluster
-    * deployment, where losing an executor mid-iteration must not force a
-    * full recompute of every prior round. Edges carry two longs, never
-    * text.
+    * Edges carry two longs, never text.
     *
     * Returns (doc_id → min-member component label, rounds taken); the
     * round count is what the chain-convergence spec bounds.
     */
-  private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 64,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
+  private[graft] def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
     // eager=false (r19): a lazy checkpoint still truncates lineage at
     // mark time (the plan becomes a LogicalRDD immediately) but defers
     // the block materialization into the FIRST consuming job — each
@@ -216,24 +211,21 @@ object Dedup {
     // pass over the edge set) plus the count. Relations that must
     // exist before their inputs' blocks are dropped (nodes, labels)
     // stay eager.
-    def snap(df: DataFrame, eager: Boolean = true): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
     def drop(df: DataFrame): Unit =
       org.apache.spark.sql.GraftSqlBridge.dropCheckpointBlocks(df)
     // canonical strictly larger→smaller orientation, one row per edge.
     // Lazy: the eager `nodes` job below materializes it (nodes must be
     // eager — its blocks are consumed only at the END, after the loop
     // has dropped the initial edge generation it derives from).
-    var edges = snap(pairs
+    var edges = pairs
       .select(greatest(col("d1"), col("d2")).as("u"), least(col("d1"), col("d2")).as("v"))
-      .filter(col("u") =!= col("v")).distinct(), eager = false)
-    val nodes = snap(edges.select(col("u")).union(edges.select(col("v")))
-      .distinct().withColumnRenamed("u", "doc_id"))
+      .filter(col("u") =!= col("v")).distinct().localCheckpoint(eager = false)
+    val nodes = edges.select(col("u")).union(edges.select(col("v")))
+      .distinct().withColumnRenamed("u", "doc_id").localCheckpoint()
     var rounds = 0
     var prevCount = edges.count()
     var done = prevCount == 0L
-    while (!done && rounds < maxRounds) {
+    while (!done && rounds < ccMaxRounds) {
       rounds += 1
       // large-star over the full neighborhood: the two orientations are
       // disjoint (every stored edge is strictly larger→smaller), so the
@@ -245,16 +237,16 @@ object Dedup {
       // union+groupBy+join would execute twice per round. Lazy: both
       // consumers sit inside the SAME count job below; its first stage
       // over this relation persists the blocks, the second reads them.
-      val afterLarge = snap(nbrs.join(mL, "u").filter(col("v") > col("u"))
+      val afterLarge = nbrs.join(mL, "u").filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct(), eager = false)
+        .filter(col("u") =!= col("v")).distinct().localCheckpoint(eager = false)
       // small-star: all edges now point larger→smaller, so Γ⁻(u) is just
       // u's out-neighbors; link them and u itself to their minimum.
       val mS = afterLarge.groupBy("u").agg(min(col("v")).as("m"))
       val withM = afterLarge.join(mS, "u")
-      val afterSmall = snap(withM.select(col("u"), col("m").as("v"))
+      val afterSmall = withM.select(col("u"), col("m").as("v"))
         .union(withM.select(col("v").as("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), eager = false)
+        .filter(col("u") =!= col("v")).distinct().localCheckpoint(eager = false)
       // exact fixpoint test: equal cardinality + next ⊆ prev ⇒ equal sets
       // (both sides distinct); runs on two checkpointed slim relations.
       // prev's cardinality is carried from its own round — one job saved.
@@ -268,20 +260,34 @@ object Dedup {
     }
     // A mid-iteration edge set is NOT a forest of stars — nodes can carry
     // two out-edges — and labeling from it would silently emit multiple
-    // rows per doc. Fail loudly instead; maxRounds exists only as a
+    // rows per doc. Fail loudly instead; ccMaxRounds exists only as a
     // runaway backstop far above O(log diameter).
     require(done,
-      s"connected components did not converge within $maxRounds rounds")
+      s"connected components did not converge within $ccMaxRounds rounds")
     // at the fixpoint every component is a star u→root; roots (never a
     // left side) label themselves. Materialize before dropping the blocks
     // the join reads from.
-    val labels = snap(nodes
+    val labels = nodes
       .join(edges.withColumnRenamed("u", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("v"), col("doc_id")).as("label")))
+      .select(col("doc_id"), coalesce(col("v"), col("doc_id")).as("label"))
+      .localCheckpoint()
     drop(edges)
     drop(nodes)
     (labels, rounds)
   }
+
+  /** The near-dup cluster rule, the one place it is written: candidate
+    * pairs at Jaccard ≥ 0.5, joined into connected components, each doc
+    * labeled by its component's minimum doc_id. `scoredPairs` is an
+    * [[ngramJaccardPairs]]-shaped relation (d1, d2, jaccard).
+    */
+  private[graft] def nearDupLabelsOf(scoredPairs: DataFrame): DataFrame =
+    connectedComponents(
+      scoredPairs.filter(col("jaccard") >= 0.5).select("d1", "d2"))._1
+
+  /** Near-dup cluster labels (doc_id, label) over the whole corpus. */
+  private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame =
+    nearDupLabelsOf(ngramJaccardPairs(spark, dir))
 
   /** Near-duplicate CLUSTERS: connected components over the candidate
     * pairs at Jaccard ≥ 0.5, labeled by the minimum doc_id in each
@@ -289,11 +295,8 @@ object Dedup {
     * keep/drop groups (keep cluster_id, drop the rest).
     */
   def xDedupCluster(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = ngramJaccardPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val (labels, _) = connectedComponents(pairs)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    nearDupLabels(spark, dir).select(col("doc_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size", count(lit(1)).over(w))
       .orderBy("doc_id")
   }
@@ -325,12 +328,9 @@ object Dedup {
     * over CLUSTERED docs only (a small fraction of the corpus, cluster
     * sizes bounded by near-dup semantics — not a corpus-wide window).
     */
-  def xDedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = ngramJaccardPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val (labels, _) = connectedComponents(pairs)
-    keepBestVerdicts(Tables.documents(spark, dir), labels).orderBy("doc_id")
-  }
+  def xDedupKeepBest(spark: SparkSession, dir: String): DataFrame =
+    keepBestVerdicts(Tables.documents(spark, dir), nearDupLabels(spark, dir))
+      .orderBy("doc_id")
 
   /** The keep-best verdict chain itself — per clustered doc, kept = 1
     * iff it is its cluster's quality argmax. Factored so the composed
@@ -445,16 +445,14 @@ object Dedup {
   private[graft] def keepBestAdmitState(spark: SparkSession,
       dir: String): (Long, DataFrame, DataFrame) = {
     val docs = Tables.documents(spark, dir)
-    val half = docs.agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val half = Tables.admissionSplit(docs, "doc_id")
     val adm = docs.filter(col("doc_id") < half)
     // Frozen cluster labels over the admitted half, widened to
     // singletons: every admitted doc owns a cluster (itself by default)
     // so an attachment to an unclustered admitted doc still meets a
     // frozen keeper.
     val (rawPairs, admRare) = ngramJaccardPairsAndRare(adm)
-    val pairs = rawPairs
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val (cc, _) = connectedComponents(pairs)
+    val cc = nearDupLabelsOf(rawPairs)
     val labels = adm.select("doc_id")
       .join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
@@ -475,15 +473,11 @@ object Dedup {
     (half, idx, keepers)
   }
 
-  def xDedupCorpusNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = ngramJaccardPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select("d1", "d2")
-    val (labels, _) = connectedComponents(pairs)
-    dedupCorpusNearDup(Tables.documents(spark, dir), labels)
+  def xDedupCorpusNearDup(spark: SparkSession, dir: String): DataFrame =
+    dedupCorpusNearDup(Tables.documents(spark, dir), nearDupLabels(spark, dir))
       .select(col("doc_id"), col("source"), col("lang"),
         md5(col("text")).as("text_hash"))
       .orderBy("doc_id")
-  }
 
   // Engine-portable sketch hashing (MinHash + SimHash): a Horner gram/token
   // hash mod P (codegen'd HornerHash expression) composed with 64 affine
@@ -651,7 +645,7 @@ object Dedup {
     */
   def xDedupMinhashAdmit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = docs.agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(docs, "doc_id")
     val admitted = minhashSigs(docs.filter(col("doc_id") < split)).persist()
     minhashIncrement(admitted, docs.filter(col("doc_id") >= split))._2
   }
@@ -922,7 +916,7 @@ object Dedup {
   private[graft] def spanAdmitState(spark: SparkSession,
       dir: String): (Long, DataFrame) = {
     val docs = Tables.documents(spark, dir)
-    val half = docs.agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val half = Tables.admissionSplit(docs, "doc_id")
     (half, spanHashes(docs.filter(col("doc_id") < half))
       .select("h").distinct())
   }

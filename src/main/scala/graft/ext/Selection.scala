@@ -183,8 +183,7 @@ object Selection {
     * batch arrived. Same parameterized twin, trainWhere swapped.
     */
   def xTextNbAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val split = Tables.documents(spark, dir)
-      .agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
     nbClass(spark, dir, col("doc_id") < split)
   }
 
@@ -202,8 +201,7 @@ object Selection {
     */
   def nbFrozen(spark: SparkSession, dir: String)
       : Seq[(String, Double, Double, Map[String, Double])] = {
-    val split = Tables.documents(spark, dir)
-      .agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
     val docs = Tables.documents(spark, dir)
       .withColumn("tr", col("doc_id") < split)
     val trainToks = docs.filter(col("tr"))

@@ -629,7 +629,7 @@ object Similarity {
     */
   def xAnnIvfAdmit(spark: SparkSession, dir: String): DataFrame = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     val cents = lloydCentroids(e.filter(col("vec_id") < split), 16, 1)
     e.filter(col("vec_id") >= split)
       .select(col("vec_id"),
@@ -988,7 +988,7 @@ object Similarity {
     */
   def xDedupEmbCosineLshAdmit(spark: SparkSession, dir: String): DataFrame = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     val buckets = lshInvertedList(e)
     lshVerifiedPairs(buckets, buckets.filter(col("vec_id") >= split), e)
   }
@@ -1162,7 +1162,7 @@ object Similarity {
     */
   def xDedupSemanticAdmit(spark: SparkSession, dir: String): DataFrame = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     val cents = lloydCentroids(e.filter(col("vec_id") < split), 16, 1)
     val assigned = e.withColumn("cell",
       VectorFunctions.nearestCentroid(col("embedding"), cents))
@@ -1272,7 +1272,7 @@ object Similarity {
   private[graft] def knnAdmitState(spark: SparkSession,
       dir: String): (Long, Array[Array[Double]], DataFrame) = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     val cents = lloydCentroids(e.filter(col("vec_id") < split), 16, 1)
     val admitted = e.filter(col("vec_id") < split)
       .withColumn("cell",
@@ -2252,10 +2252,7 @@ object Similarity {
     */
   def xEmbDrift(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    // Empty-corpus guard: max() over no rows is null — an empty report,
-    // not an NPE (half = 0 puts both halves empty).
-    val hr = e.agg(expr("(max(vec_id) + 1) div 2")).head()
-    val half = if (hr.isNullAt(0)) 0L else hr.getLong(0)
+    val half = Tables.admissionSplit(e, "vec_id")
     def shares(df: DataFrame, as: String): DataFrame =
       embManifestCard(df).select(col("label"), col("vec_share_bp").as(as))
     shares(e.filter(col("vec_id") < half), "ref_share_bp")
@@ -2653,7 +2650,7 @@ object Similarity {
     */
   def xAnnIvfAdcAdmit(spark: SparkSession, dir: String): DataFrame = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     val train = e.filter(col("vec_id") < split)
     val cents = lloydCentroids(train, 16, 1)
     val centsLit = typedlit(cents.map(_.toSeq).toSeq)
@@ -2700,7 +2697,7 @@ object Similarity {
   private[graft] def pqAdmitState(spark: SparkSession,
       dir: String): (Long, Array[Array[Array[Double]]]) = {
     val e = withVecNorm(Tables.embeddings(spark, dir))
-    val split = e.agg(expr("(max(vec_id) + 1) div 2")).head().getLong(0)
+    val split = Tables.admissionSplit(e, "vec_id")
     (split, pqCodebooks(e.filter(col("vec_id") < split)))
   }
 

@@ -564,8 +564,7 @@ object TextAnalysis {
     */
   private[graft] def admitMergeList(spark: SparkSession, dir: String)
       : (Long, Vector[(String, String)]) = {
-    val half = Tables.documents(spark, dir)
-      .agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val half = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
     val (merges, _) = bpeTrain(
       bpeTokenize(spark, dir).filter(col("doc_id") < half), bpeRounds)
     (half, merges.map(m => (m._2, m._3)))
@@ -631,10 +630,7 @@ object TextAnalysis {
     */
   def xCorpusDrift(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // Empty-corpus guard: max() over no rows is null — an empty report,
-    // not an NPE (half = 0 puts both halves empty).
-    val hr = docs.agg(expr("(max(doc_id) + 1) div 2")).head()
-    val half = if (hr.isNullAt(0)) 0L else hr.getLong(0)
+    val half = Tables.admissionSplit(docs, "doc_id")
     driftBetween(
       manifestCard(docs.filter(col("doc_id") < half)),
       manifestCard(docs.filter(col("doc_id") >= half)))
@@ -1276,7 +1272,7 @@ object TextAnalysis {
     */
   def xTextWinnowAdmit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val half = docs.agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val half = Tables.admissionSplit(docs, "doc_id")
     val fps = docs.select(col("doc_id"), explode(array_distinct(
         graft.functions.VectorFunctions.winnowFingerprints(col("text"))))
         .as("fp"))
@@ -1302,7 +1298,7 @@ object TextAnalysis {
   private[graft] def winnowAdmitState(spark: SparkSession,
       dir: String): (Long, DataFrame) = {
     val docs = Tables.documents(spark, dir)
-    val half = docs.agg(expr("(max(doc_id) + 1) div 2")).head().getLong(0)
+    val half = Tables.admissionSplit(docs, "doc_id")
     val fps = docs.filter(col("doc_id") < half)
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.VectorFunctions.winnowFingerprints(col("text"))))

@@ -159,7 +159,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("Pipeline.run publishes every relation as its builder plans it") {
     val out = java.nio.file.Files.createTempDirectory("graft_publish").toString
-    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    val labels = Some(ext.Dedup.nearDupLabels(spark, sf).localCheckpoint())
     val counts = Pipeline.run(spark, sf, out, labels)
     val layers = Pipeline.layers(spark, sf, labels)
     assert(counts.keySet == layers.map(_._1).toSet)
@@ -175,7 +175,7 @@ class ExtensionsSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    val labels = Some(ext.Dedup.nearDupLabels(spark, sf).localCheckpoint())
     def publishThreads = Thread.getAllStackTraces.keySet.asScala
       .filter(t => t.isAlive && t.getName.startsWith("Pipeline.run "))
     // The jobs of this test's group that the status store still shows as
@@ -223,7 +223,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("Pipeline.run's publish jobs carry the caller's job group") {
     val out = java.nio.file.Files.createTempDirectory("graft_group").toString
-    val labels = Some(Pipeline.nearDupLabels(spark, sf).localCheckpoint())
+    val labels = Some(ext.Dedup.nearDupLabels(spark, sf).localCheckpoint())
     val build = jobsRun {
       Pipeline.layers(spark, sf, labels)
       ops.Quality.dqChecks(spark, sf)
@@ -804,22 +804,12 @@ class ExtensionsSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("connected components with a reliable checkpoint dir match localCheckpoint labels") {
+  test("admission split is (max id + 1) div 2, and 0 on an empty relation") {
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    // Mixed shape: a chain, a triangle, an isolated pair — enough rounds
-    // to exercise per-round checkpointing on the reliable path.
-    val pairs = ((0L until 15L).map(i => (i, i + 1)) ++
-      Seq((100L, 101L), (101L, 102L), (102L, 100L), (200L, 201L))).toDF("d1", "d2")
-    val (local, _) = ext.Dedup.connectedComponents(pairs)
-    val (reliable, _) = ext.Dedup.connectedComponents(pairs, checkpointDir = Some(ckpt))
-    val lm = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rm = reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lm == rm, s"reliable-checkpoint labels diverge: ${rm.toSeq.diff(lm.toSeq)}")
-    // the reliable path actually wrote checkpoint data under the dir
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, "reliable checkpoint wrote nothing under the checkpoint dir")
+    def ids(n: Int) = (0L until n.toLong).toDF("doc_id")
+    assert(Tables.admissionSplit(ids(0), "doc_id") == 0L)
+    assert(Tables.admissionSplit(ids(10), "doc_id") == 5L)
+    assert(Tables.admissionSplit(ids(11), "doc_id") == 5L)
   }
 
   test("minhash and simhash recover the strongest exact-Jaccard pairs") {

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 /** Drift guards over the sources: every session — the mains, the oracle
   * gate and the test fixture — comes from `Session.local`, so they all
-  * run one configuration; and the shelf's build stamp is read and
-  * written only by `ArtifactShelf`, so its format and lock stay in one
-  * place.
+  * run one configuration; the shelf's build stamp is read and written
+  * only by `ArtifactShelf`, so its format and lock stay in one place;
+  * and the near-dup cluster rule and the admission split each have one
+  * definition.
   */
 class SessionSpec extends AnyFunSuite {
   /** Non-comment lines matching `pattern` in the `.scala` files under
@@ -51,5 +52,14 @@ class SessionSpec extends AnyFunSuite {
       "art_build_stamp".r)
     assert(found.isEmpty,
       s"read and write the build stamp through ArtifactShelf: ${found.mkString(", ")}")
+  }
+
+  test("the near-dup cluster rule and the admission split are written only by their owners") {
+    val cut = offenders(Seq("src/main/scala"), "Dedup.scala", """jaccard"\) >= 0.5""".r)
+    assert(cut.isEmpty,
+      s"cluster near-dups through Dedup.nearDupLabels: ${cut.mkString(", ")}")
+    val split = offenders(Seq("src/main/scala"), "Tables.scala", """expr\("\(max\(""".r)
+    assert(split.isEmpty,
+      s"split admission halves through Tables.admissionSplit: ${split.mkString(", ")}")
   }
 }
