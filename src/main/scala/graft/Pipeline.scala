@@ -142,8 +142,8 @@ object Pipeline {
     *    reads only selected prototypes, which prunes to one directory.
     * Both artifacts are id-joined rebuilds of gated operators, so the
     * Pipeline spec asserts rebuild parity row-for-row.
-    */
-  /** `planes`/`kCells` are the r15 BUILD-SCALE knobs (the SCALE.md
+    *
+    * `planes`/`kCells` are the r15 BUILD-SCALE knobs (the SCALE.md
     * doctrine "scale the blocking grid with the corpus" lifted to the
     * Pipeline layer): the banding grid the central-retention chain
     * blocks on and the quantizer cell count the score graph partitions
@@ -241,6 +241,77 @@ object Pipeline {
     verdDir
   }
 
+  /** Starts the signature state [[admitBatch]] appends to: deletes any
+    * state at `sigStatePath` and commits `docs`' signatures as batch
+    * `init`.
+    */
+  def initSigState(spark: SparkSession, docs: DataFrame, sigStatePath: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(sigStatePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) fs.delete(root, true)
+    commitBatch(spark, ext.Dedup.minhashSigs(docs), sigStatePath, "init")
+  }
+
+  /** The admitted signature state: one (doc_id, h0..h63) row per doc. */
+  def readSigState(spark: SparkSession, sigStatePath: String): DataFrame =
+    spark.read.parquet(sigStatePath).drop("batch_id")
+      .dropDuplicates(Seq("doc_id"))
+
+  /** The id a versioned batch append commits under — ONE resolution for
+    * every consumer (the MinHash signature state, the serve-index delta
+    * and tombstones): None for an empty batch (callers short-circuit
+    * before committing anything, whether or not `named` is given), else
+    * `named` if non-empty, else the content-derived id, so replaying the
+    * same batch is recognized without the caller naming it.
+    *
+    * The content id: (min, max, count) alone is NOT content-unique — two
+    * interleaved id sets (e.g. {0,3,9} vs {0,5,9}) collide, silently
+    * misclassifying the second as a replay — so the id also folds an
+    * order-independent digest of the full id set (xor of xxhash64(id):
+    * commutative, so partitioning can't change it). The digest folds the
+    * DISTINCT ids (r18, ADVICE r17) — xor cancels on duplicated ids
+    * (h ⊕ h = 0), so a batch whose rows were duplicated between a crash
+    * and its replay (the same arrival delivered twice into one
+    * micro-batch) would otherwise derive a DIFFERENT id than its
+    * committed partition and wedge the replay in a loud guard-crash loop
+    * instead of no-oping. Unique-id batches — every batch the contract
+    * admits — digest identically to the historical derivation, so
+    * already-committed ids stay stable. (The one un-recognized legacy
+    * shape: a pre-r18 partition whose COMMITTED rows contain in-batch
+    * duplicates — only reachable via the r17 duplicate fan-out, and no
+    * shipped shelf carries one; if one ever surfaces, delete that
+    * partition and replay the batch.)
+    *
+    * The charset rule, the only one: the id becomes a literal
+    * `batch_id=<id>` directory. Spark partition discovery URL-unescapes
+    * %xx on read, so an id containing '%' would read back as a DIFFERENT
+    * value and a replay exclusion would silently miss. And an id that
+    * partition-type inference can parse as int/long/decimal/date ("123",
+    * "-1", "2020-01-01") infers differently under a single-partition
+    * read vs the mixed full relation, so the serve index's composed
+    * stamp would silently diverge from its full-scan stamp. A LEADING
+    * letter/underscore kills every non-string parse; every content id
+    * starts with "auto_".
+    */
+  private def batchIdOf(rows: DataFrame, idCol: String,
+      named: String): Option[String] = {
+    val stats = rows.select(col(idCol)).distinct().agg(count(lit(1)),
+      min(col(idCol)), max(col(idCol)), bit_xor(xxhash64(col(idCol)))).head()
+    if (stats.getLong(0) == 0L) None
+    else {
+      val id = if (named.nonEmpty) named
+        else s"auto_${stats.getLong(1)}_${stats.getLong(2)}_" +
+          s"${stats.getLong(0)}_${java.lang.Long.toHexString(stats.getLong(3))}"
+      require(id.matches("[A-Za-z_][A-Za-z0-9_-]*"),
+        s"bad batch id: $id (a batch id must start with a letter or " +
+          "underscore and use only [A-Za-z0-9_-]: '%' reads back " +
+          "URL-unescaped, and an id that partition-type-infers as " +
+          "int/decimal/date reads back differently under single-partition " +
+          "vs full-relation scans, breaking the composed stamp)")
+      Some(id)
+    }
+  }
+
   /** Operational incremental near-dup admission: the MinHash signature
     * table parquet at `sigStatePath` is the persisted dedup STATE (64
     * longs per admitted doc). `admitBatch` signs only the new batch,
@@ -254,10 +325,10 @@ object Pipeline {
     * `initSigState`.
     *
     * CRASH SAFETY / IDEMPOTENCE: each batch is one `batch_id=<id>`
-    * partition directory, committed via staged-write + atomic directory
-    * rename (atomic on HDFS and local filesystems; an object store
-    * deployment swaps the rename for its own atomic-commit primitive).
-    * The rename is the sole commit point:
+    * partition directory ([[batchIdOf]]), committed via staged-write +
+    * atomic directory rename (atomic on HDFS and local filesystems; an
+    * object store deployment swaps the rename for its own atomic-commit
+    * primitive). The rename is the sole commit point:
     *  - crash BEFORE the rename leaves only an `_staging_<id>` dir
     *    (underscore-prefixed — invisible to partition discovery); the
     *    re-run deletes it and completes, emitting the same pairs;
@@ -270,82 +341,28 @@ object Pipeline {
     * same document arriving under two different batch ids (signature
     * rows are deterministic in the text, so any survivor is correct).
     */
-  def initSigState(spark: SparkSession, docs: DataFrame, sigStatePath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(sigStatePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    commitSigBatch(spark, ext.Dedup.minhashSigs(docs), sigStatePath, "init")
-  }
-
-  /** The admitted signature state: one (doc_id, h0..h63) row per doc. */
-  def readSigState(spark: SparkSession, sigStatePath: String): DataFrame =
-    spark.read.parquet(sigStatePath).drop("batch_id")
-      .dropDuplicates(Seq("doc_id"))
-
-  /** Content-derived default batch id — ONE derivation (r16, factored
-    * for every versioned-append consumer: the MinHash signature state
-    * and the serve-index delta): replaying the same batch is recognized
-    * without the caller naming it. (min, max, count) alone is NOT
-    * content-unique — two interleaved id sets (e.g. {0,3,9} vs {0,5,9})
-    * collide, silently misclassifying the second as a replay — so the
-    * id also folds an order-independent digest of the full id set
-    * (xor of xxhash64(id): commutative, so partitioning can't change
-    * it). Returns None for an empty batch (no row to fold — callers
-    * short-circuit before committing anything).
-    */
-  /** r18 (ADVICE r17): the digest folds the DISTINCT ids — xor cancels
-    * on duplicated ids (h ⊕ h = 0), so a batch whose rows were
-    * duplicated between a crash and its replay (the same arrival
-    * delivered twice into one micro-batch) would otherwise derive a
-    * DIFFERENT id than its committed partition and wedge the replay in
-    * a loud guard-crash loop instead of no-oping. Unique-id batches —
-    * every batch the contract admits — digest identically to the
-    * historical derivation (distinct is the identity on them), so
-    * already-committed ids stay stable across this change. (The one
-    * un-recognized legacy shape: a pre-r18 partition whose COMMITTED
-    * rows contain in-batch duplicates — only reachable via the r17
-    * duplicate fan-out this round removed, and no shipped shelf
-    * carries one; if one ever surfaces, delete that partition and
-    * replay the batch.)
-    */
-  private def contentBatchId(df: DataFrame, idCol: String): Option[String] = {
-    val stats = df.select(col(idCol)).distinct().agg(count(lit(1)),
-      min(col(idCol)), max(col(idCol)), bit_xor(xxhash64(col(idCol)))).head()
-    if (stats.getLong(0) == 0L) None
-    else Some(
-      s"auto_${stats.getLong(1)}_${stats.getLong(2)}_${stats.getLong(0)}_" +
-        java.lang.Long.toHexString(stats.getLong(3)))
-  }
-
   def admitBatch(spark: SparkSession, sigStatePath: String,
-      newDocs: DataFrame, batchId: String = ""): DataFrame = {
-    val autoId = contentBatchId(newDocs, "doc_id")
-    if (autoId.isEmpty) {
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("d1", LongType), StructField("d2", LongType),
-          StructField("est_jaccard", DoubleType))))
+      newDocs: DataFrame, batchId: String = ""): DataFrame =
+    batchIdOf(newDocs, "doc_id", batchId) match {
+      case None =>
+        import org.apache.spark.sql.types._
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq(StructField("d1", LongType), StructField("d2", LongType),
+            StructField("est_jaccard", DoubleType))))
+      case Some(id) =>
+        // State as of BEFORE this batch: pruning out batch_id=<id> makes
+        // the pair computation a pure function of (prior state, batch)
+        // whether or not a previous attempt already committed.
+        val state = spark.read.parquet(sigStatePath)
+          .filter(col("batch_id").cast("string") =!= id)
+          .drop("batch_id").dropDuplicates(Seq("doc_id"))
+        val (newSigs, pairs) = ext.Dedup.minhashIncrement(state, newDocs)
+        // Materialize pairs BEFORE committing: they read the pre-commit state.
+        val out = pairs.localCheckpoint()
+        commitBatch(spark, newSigs, sigStatePath, id)
+        out
     }
-    val id = if (batchId.nonEmpty) batchId else autoId.get
-    // Safe charset only: the id becomes a literal batch_id=<id> directory,
-    // but Spark partition discovery URL-unescapes %xx on read — an id
-    // containing '%' would read back as a DIFFERENT value and the replay
-    // exclusion would silently miss (duplicated pairs on replay). '/','='
-    // rejection alone left that hole open.
-    require(id.matches("[A-Za-z0-9_-]+"), s"bad batch id: $id")
-    // State as of BEFORE this batch: pruning out batch_id=<id> makes the
-    // pair computation a pure function of (prior state, batch) whether
-    // or not a previous attempt already committed.
-    val state = spark.read.parquet(sigStatePath)
-      .filter(col("batch_id").cast("string") =!= id)
-      .drop("batch_id").dropDuplicates(Seq("doc_id"))
-    val (newSigs, pairs) = ext.Dedup.minhashIncrement(state, newDocs)
-    // Materialize pairs BEFORE committing: they read the pre-commit state.
-    val out = pairs.localCheckpoint()
-    commitSigBatch(spark, newSigs, sigStatePath, id)
-    out
-  }
 
   /** INCREMENTAL serve-index maintenance (r16 — the r15 verdict's gap
     * #3): apply a batch of ADMITTED vector-ingest verdicts to the
@@ -361,36 +378,57 @@ object Pipeline {
     * centroid index over (corpus ∪ admitted arrivals) — parity
     * spec-gated row-for-row.
     *
-    * VERSIONING / IDEMPOTENCE (the admitBatch contract verbatim): each
-    * batch is one `batch_id=<id>` partition committed by staged-write +
-    * atomic rename — a replayed batch sees its directory and appends
-    * nothing; the content-derived default id recognizes replays without
-    * the caller naming them. The append then RESTAMPS art_serve_delta
-    * UNCONDITIONALLY (count + fingerprint of what is on disk), so a
-    * crash between a committed rename and the restamp fails loudly at
-    * the next load and re-running the append repairs it. Ids follow the
-    * gate's nondecreasing-id contract (each vec_id lives in exactly one
-    * batch); a periodic full serve refresh retires the delta — the
-    * refresh path deletes it, because a rebuilt base already contains
-    * the admitted vectors. Returns the delta relation's total row count.
+    * VERSIONING / IDEMPOTENCE ([[appendIndexBatch]], the admitBatch
+    * contract): each batch is one `batch_id=<id>` partition committed by
+    * staged-write + atomic rename — a replayed batch sees its directory
+    * and appends nothing; the content-derived default id recognizes
+    * replays without the caller naming them. Ids follow the gate's
+    * nondecreasing-id contract (each vec_id lives in exactly one batch),
+    * which the guard enforces; a periodic full serve refresh retires the
+    * delta — the refresh path deletes it, because a rebuilt base already
+    * contains the admitted vectors. Returns the delta relation's total
+    * row count.
     */
   def appendServeDelta(spark: SparkSession, shelfDir: String,
       deltaRows: DataFrame, batchId: String = ""): Long = {
-    val path = s"$shelfDir/art_serve_delta"
     // Pin ONE evaluation of the batch (deltaRows is a verdicts→vectors
     // join): the content id is digested from the SAME rows the commit
     // writes — a nondeterministic upstream can no longer stamp an id
     // that doesn't describe the committed batch.
     val rows = deltaRows.localCheckpoint()
-    val autoId = contentBatchId(rows, "id2")
-    // Empty batch: nothing to index — short-circuit whether or not the
-    // caller named an id (the admitBatch contract; committing an empty
-    // batch_id partition and restamping bought nothing).
-    if (autoId.isEmpty) return existingCount(spark, path)
-    val id = if (batchId.nonEmpty) batchId else autoId.get
-    require(id.matches("[A-Za-z0-9_-]+"), s"bad batch id: $id")
-    appendIndexBatch(spark, shelfDir, "art_serve_delta", rows, id,
-      guardIds = Some("id2"))
+    appendIndexBatch(spark, shelfDir, "art_serve_delta", rows, "id2",
+        batchId) { id =>
+      // A delta batch whose ids already live in the served base ∪ delta
+      // would silently double-index those vectors in every top-k — fail
+      // loudly instead. Slim-column aggs over (base ∪ delta) ids — the
+      // ONE servedIds construction (its scaladoc records the deliberate
+      // stamp-guard bypass). This id-column scan is the append's
+      // remaining O(relation) term — column-pruned to 8-byte ids,
+      // deliberately kept (a wrong accept corrupts search results;
+      // composing max-served/tombstone digests onto the stamp row is the
+      // recorded next step if id-scan cost ever shows up).
+      val maxServed = servedIds(spark, shelfDir)
+        .agg(max(col("id2"))).head().getLong(0)
+      val stats = rows.agg(min(col("id2")), count(lit(1)),
+        count_distinct(col("id2"))).head()
+      val minNew = stats.getLong(0)
+      require(minNew > maxServed,
+        s"art_serve_delta batch $id violates the nondecreasing-id " +
+          s"contract: min new id $minNew <= max served id $maxServed — " +
+          "an overlapping id would double-index that vector in the " +
+          "base ∪ delta union")
+      // Within-batch duplicates pass the nondecreasing check silently
+      // (min > max-served says nothing about rows sharing an id) but
+      // double-index the vector in every top-k all the same — ADVICE
+      // r17. The verdict-only serveDeltaRows arm cannot produce them
+      // (one verdict per id by the gate's state); hand-built delta rows
+      // get caught here.
+      require(stats.getLong(1) == stats.getLong(2),
+        s"art_serve_delta batch $id carries duplicate id2 rows " +
+          s"(${stats.getLong(1)} rows over ${stats.getLong(2)} " +
+          "distinct ids) — a duplicated insert double-indexes that " +
+          "vector in every top-k")
+    }
   }
 
   /** The serve-delta loop COMPOSED as one streaming topology (r17 —
@@ -511,17 +549,19 @@ object Pipeline {
     * spec-gated; a re-TRAINED rebuild is still never the comparison
     * (the xAnnIvfAdmit re-cell argument).
     *
-    * Same machinery as appendServeDelta verbatim (ONE commit+restamp
-    * tail, appendIndexBatch): content-derived batch id, staged-write +
-    * atomic-rename `batch_id=<id>` partitions, unconditional restamp,
+    * Same machinery as appendServeDelta ([[appendIndexBatch]]):
+    * content-derived batch id, staged-write + atomic-rename
+    * `batch_id=<id>` partitions, unconditional restamp,
     * replay-idempotent, retired by the serve refresh (the rebuilt base
     * indexes the refresh corpus snapshot, which no longer contains the
     * removed vectors). The guard is the delta's INVERTED: a genuinely
     * new tombstone batch must name ids that ARE currently served
     * (base ∪ delta) and are NOT already tombstoned — a typo'd removal
     * id would otherwise no-op silently forever, and a double tombstone
-    * would hide a bookkeeping bug upstream. Returns the tombstone
-    * relation's total row count.
+    * would hide a bookkeeping bug upstream. Like the delta's, the guard
+    * runs under the stamp lock, so a concurrent compaction cannot delete
+    * the relations it scans. Returns the tombstone relation's total row
+    * count.
     *
     * An UPDATE (content re-embedded under a new encoder or revision)
     * is deliberately NOT a third operation: it is a tombstone of the
@@ -534,30 +574,23 @@ object Pipeline {
     */
   def appendServeTombstones(spark: SparkSession, shelfDir: String,
       removedIds: DataFrame, batchId: String = ""): Long = {
-    val path = s"$shelfDir/art_serve_tombstones"
     // Distinct ids: the same removal delivered twice WITHIN one batch
     // is a re-delivery, not a second removal — absorb it (r18, the
-    // contentBatchId distinct-digest rationale); the double-removal
+    // batchIdOf distinct-digest rationale); the double-removal
     // guard below keeps catching repeats across batches, which ARE
     // bookkeeping bugs.
     val rows = removedIds.select(col("id2"))
       .dropDuplicates(Seq("id2")).localCheckpoint()
-    val autoId = contentBatchId(rows, "id2")
-    if (autoId.isEmpty) return existingCount(spark, path)
-    val id = if (batchId.nonEmpty) batchId else autoId.get
-    require(id.matches("[A-Za-z0-9_-]+"), s"bad batch id: $id")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isReplay = fs.exists(
-      new org.apache.hadoop.fs.Path(path, s"batch_id=$id"))
-    if (!isReplay) {
+    appendIndexBatch(spark, shelfDir, "art_serve_tombstones", rows, "id2",
+        batchId) { id =>
       val notServed = rows.join(servedIds(spark, shelfDir),
         Seq("id2"), "left_anti").count()
       require(notServed == 0L,
         s"tombstone batch $id names $notServed ids not in the served " +
           "base ∪ delta — a removal of an unindexed vector is a " +
           "bookkeeping error upstream, not a no-op")
-      val already = if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+      val path = s"$shelfDir/art_serve_tombstones"
+      val already = if (exists(spark, path))
         rows.join(spark.read.parquet(path).select(col("id2")),
           Seq("id2"), "semi").count()
       else 0L
@@ -566,8 +599,6 @@ object Pipeline {
           "ids — each removal is one tombstone (the one-batch-per-id " +
           "contract the delta side keeps)")
     }
-    appendIndexBatch(spark, shelfDir, "art_serve_tombstones", rows, id,
-      guardIds = None)
   }
 
   /** The served id set, (base ∪ delta) — ONE construction for the two
@@ -586,14 +617,11 @@ object Pipeline {
     */
   private def servedIds(spark: SparkSession, shelfDir: String): DataFrame = {
     import spark.implicits._
-    val deltaPath = new org.apache.hadoop.fs.Path(
-      s"$shelfDir/art_serve_delta")
-    val fs = deltaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val deltaPath = s"$shelfDir/art_serve_delta"
     spark.read.parquet(s"$shelfDir/art_serve_inverted").select(col("id2"))
       .unionByName(
-        if (fs.exists(deltaPath))
-          spark.read.parquet(s"$shelfDir/art_serve_delta")
-            .select(col("id2"))
+        if (exists(spark, deltaPath))
+          spark.read.parquet(deltaPath).select(col("id2"))
         else spark.emptyDataset[Long].toDF("id2"))
   }
 
@@ -643,113 +671,70 @@ object Pipeline {
     }
   }
 
-  /** Total rows of a versioned batch relation, 0 when absent (Hadoop FS
-    * existence — production load paths, not local-only probes).
+  /** Whether `path` exists (Hadoop FS existence — production load paths,
+    * not local-only probes).
     */
-  private def existingCount(spark: SparkSession, path: String): Long = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path).count() else 0L
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Shared commit+restamp tail for the serve index's versioned batch
-    * relations (`art_serve_delta`, `art_serve_tombstones` — ONE
-    * machinery, the appendServeDelta contract): atomic-rename commit of
-    * `batch_id=<id>`, then an UNCONDITIONAL restamp of the relation
-    * (crash between rename and restamp fails loudly at the next load;
-    * re-running repairs). `guardIds` names the id column to enforce the
-    * nondecreasing-id contract on BEFORE a genuinely new partition
-    * commits: a delta batch whose ids already live in the served base ∪
-    * delta would silently double-index those vectors in every top-k —
-    * fail loudly instead (one agg over the slim id columns). Replays
-    * (the batch directory already exists) skip the guard — their ids
-    * are SUPPOSED to be present.
+  /** Total rows of a versioned batch relation, 0 when absent. */
+  private def existingCount(spark: SparkSession, path: String): Long =
+    if (exists(spark, path)) spark.read.parquet(path).count() else 0L
+
+  /** The ONE append of a batch to the serve index's versioned batch
+    * relations (`art_serve_delta`, `art_serve_tombstones`): resolves the
+    * batch id ([[batchIdOf]] — an empty batch appends nothing and
+    * returns the relation's row count), then, under the stamp lock, runs
+    * the caller's `guard` on the resolved id unless the batch directory
+    * already exists (a replay: its ids are SUPPOSED to be present),
+    * atomic-rename commits `batch_id=<id>`, and restamps the relation
+    * UNCONDITIONALLY (a crash between rename and restamp fails loudly at
+    * the next load; re-running repairs). Guard, commit and restamp all
+    * hold the lock, so neither a concurrent append nor a compaction
+    * (which deletes these relations under it) can interleave. Returns
+    * the relation's total row count.
     */
   private def appendIndexBatch(spark: SparkSession, shelfDir: String,
-      artifact: String, rows: DataFrame, id: String,
-      guardIds: Option[String]): Long = {
+      artifact: String, rows: DataFrame, idCol: String, batchId: String)(
+      guard: String => Unit): Long = {
     val path = s"$shelfDir/$artifact"
-    // The id becomes a batch_id=<id> partition VALUE that the
-    // incremental restamp reads back standalone: an id Spark's
-    // partition-type inference can parse as int/long/decimal/date
-    // ("123", "-1", "2020-01-01") would infer differently under a
-    // single-partition read vs the mixed full relation, and the
-    // composed stamp would silently diverge from the full-scan stamp.
-    // A LEADING letter/underscore kills every non-string parse
-    // (Integer/Long/BigDecimal/date/timestamp all reject it). Every
-    // auto id starts with "auto_"; named ids must lead likewise.
-    require(id.matches("[A-Za-z_][A-Za-z0-9_-]*"),
-      s"batch id must start with a letter or underscore: $id (an id " +
-        "that partition-type-infers as int/decimal/date reads back " +
-        "differently under single-partition vs full-relation scans, " +
-        "breaking the composed stamp)")
-    // Guard + commit + restamp hold the stamp lock (concurrent streams).
-    ArtifactShelf.restamp(spark, shelfDir) { old =>
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isReplay = fs.exists(
-      new org.apache.hadoop.fs.Path(path, s"batch_id=$id"))
-    guardIds.foreach { idCol =>
-      if (!isReplay) {
-        // Slim-column aggs over (base ∪ delta) ids — the ONE servedIds
-        // construction (its scaladoc records the deliberate
-        // stamp-guard bypass). This id-column scan is the append's
-        // remaining O(relation) term — column-pruned to 8-byte ids,
-        // deliberately kept (a wrong accept corrupts search results;
-        // composing max-served/tombstone digests onto the stamp row
-        // is the recorded next step if id-scan cost ever shows up).
-        val maxServed = servedIds(spark, shelfDir)
-          .agg(max(col("id2"))).head().getLong(0)
-        val stats = rows.agg(min(col(idCol)), count(lit(1)),
-          count_distinct(col(idCol))).head()
-        val minNew = stats.getLong(0)
-        require(minNew > maxServed,
-          s"$artifact batch $id violates the nondecreasing-id contract: " +
-            s"min new id $minNew <= max served id $maxServed — an " +
-            "overlapping id would double-index that vector in the " +
-            "base ∪ delta union")
-        // Within-batch duplicates pass the nondecreasing check silently
-        // (min > max-served says nothing about rows sharing an id) but
-        // double-index the vector in every top-k all the same —
-        // ADVICE r17. The verdict-only serveDeltaRows arm cannot
-        // produce them (one verdict per id by the gate's state);
-        // hand-built delta rows get caught here.
-        require(stats.getLong(1) == stats.getLong(2),
-          s"$artifact batch $id carries duplicate $idCol rows " +
-            s"(${stats.getLong(1)} rows over ${stats.getLong(2)} " +
-            "distinct ids) — a duplicated insert double-indexes that " +
-            "vector in every top-k")
+    batchIdOf(rows, idCol, batchId) match {
+      case None => existingCount(spark, path)
+      case Some(id) => ArtifactShelf.restamp(spark, shelfDir) { old =>
+        val isReplay = exists(spark, s"$path/batch_id=$id")
+        if (!isReplay) guard(id)
+        val committed = commitBatch(spark, rows, path, id)
+        // Restamp in O(batch), not O(relation) (r18 — the r17 verdict's
+        // task #4): the fingerprint is a wrapping SUM of per-row xxhash64,
+        // additive (ArtifactShelf.addStamps), so a
+        // fresh commit derives the relation's new stamp from (old stamp
+        // row + the committed partition's own stamp) without re-scanning
+        // every earlier batch; under frequent micro-batches the full-scan
+        // restamp was cumulatively quadratic in delta size. The batch is
+        // stamped from its READ-BACK partition (basePath keeps the
+        // batch_id column, so per-row hashes match what a full scan
+        // hashes), and a REPLAY keeps the full scan: its stamp may be
+        // repairing a crash between a committed rename and the restamp,
+        // where the old stamp row is stale and composition would bake the
+        // staleness in. Composed == full-scan is spec-pinned.
+        val (n, fp) = if (isReplay || !committed)
+          ArtifactShelf.stampOf(spark.read.parquet(path))
+        else ArtifactShelf.addStamps(old.getOrElse(artifact, (0L, 0L)),
+          ArtifactShelf.stampOf(spark.read.option("basePath", path)
+            .parquet(s"$path/batch_id=$id")))
+        (old.updated(artifact, (n, fp)), n)
       }
-    }
-    val committed = commitSigBatch(spark, rows, path, id)
-    // Restamp in O(batch), not O(relation) (r18 — the r17 verdict's
-    // task #4): the fingerprint is a wrapping SUM of per-row xxhash64,
-    // additive (ArtifactShelf.addStamps), so a
-    // fresh commit derives the relation's new stamp from (old stamp
-    // row + the committed partition's own stamp) without re-scanning
-    // every earlier batch; under frequent micro-batches the full-scan
-    // restamp was cumulatively quadratic in delta size. The batch is
-    // stamped from its READ-BACK partition (basePath keeps the
-    // batch_id column, so per-row hashes match what a full scan
-    // hashes), and a REPLAY keeps the full scan: its stamp may be
-    // repairing a crash between a committed rename and the restamp,
-    // where the old stamp row is stale and composition would bake the
-    // staleness in. Composed == full-scan is spec-pinned.
-    val (n, fp) = if (isReplay || !committed)
-      ArtifactShelf.stampOf(spark.read.parquet(path))
-    else ArtifactShelf.addStamps(old.getOrElse(artifact, (0L, 0L)),
-      ArtifactShelf.stampOf(spark.read.option("basePath", path)
-        .parquet(s"$path/batch_id=$id")))
-    (old.updated(artifact, (n, fp)), n)
     }
   }
 
-  /** Staged-write + atomic-rename commit of one signature batch; returns
-    * false (a no-op) when the batch directory already exists — either a
-    * completed earlier attempt or a concurrent committer that won the
-    * rename race.
+  /** Staged-write + atomic-rename commit of one `batch_id=<id>` batch;
+    * returns false (a no-op) when the batch directory already exists —
+    * either a completed earlier attempt or a concurrent committer that
+    * won the rename race.
     */
-  private def commitSigBatch(spark: SparkSession, sigs: DataFrame,
+  private def commitBatch(spark: SparkSession, sigs: DataFrame,
       sigStatePath: String, batchId: String): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(sigStatePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -813,20 +798,6 @@ object Pipeline {
       .filter(col("effective_date").between(from, to))
   }
 
-  /** Materialize the FROZEN ingest-gate artifact shelf — every
-    * train-once relation/constant the admission and streaming gates
-    * consume, written as versioned parquet per corpus build. This is
-    * the production contract every admission scaladoc cites
-    * ("production ships the artifact, never re-derives it in-stream")
-    * made concrete: one stage builds ALL of them from one corpus
-    * snapshot, so a deployment versions one directory per build and
-    * the gates read relations, not re-run trainers. Artifacts are
-    * deliberately the SMALL frozen states (merge lists, indexes, cut
-    * tables, centroids/codebooks, per-gate split ids); the
-    * corpus-scale side tables (inverted lists, admitted corpora) are
-    * materializeVectorCorpus/materializeTrainingCorpus's layers.
-    * Returns per-artifact row counts (the build manifest).
-    */
   /** The shelf's REFRESH GROUPS: each gate's artifact relations plus
     * its `art_splits` row, built TOGETHER by one trainer call — group
     * granularity is what keeps a partial rebuild consistent by
@@ -840,7 +811,9 @@ object Pipeline {
     "keepbest", "winnow", "span", "hub", "mix", "sample",
     "contamination", "ivf", "pq", "dsir", "nb", "diff", "serve")
 
-  /** `planes`/`kCells` are the r16 build-scale knobs (the gridFor
+  /** One refresh group's planned artifacts and its `art_splits` updates.
+    *
+    * `planes`/`kCells` are the r16 build-scale knobs (the gridFor
     * schedule threaded one layer DOWN from the r15 DAG layers into the
     * frozen-trainer builds): `planes` parameterizes the banded trainer
     * (the contamination eval index — stream gates must sign with the
@@ -854,8 +827,8 @@ object Pipeline {
     * a frozen admission quantizer re-cells every persisted verdict
     * (the xAnnIvfAdmit argument) — scale for THEM is a new corpus
     * version's full retrain, not a knob.
-    */
-  /** `sharedLabels` (r16): the near-dup cluster labels — the shingle
+    *
+    * `sharedLabels` (r16): the near-dup cluster labels — the shingle
     * self-join + star-contraction chain, the single most expensive
     * text subtree — passed ONCE per full build so the diff and span
     * groups' trainingCorpus chains don't each re-run it (the
@@ -863,8 +836,8 @@ object Pipeline {
     * A standalone group refresh derives its own (None), and a group
     * that composes the chain twice (diff: v1 + v2) still shares one
     * checkpointed pass internally.
-    */
-  /** `sharedMetrics` (r17): the three per-doc metric relations
+    *
+    * `sharedMetrics` (r17): the three per-doc metric relations
     * (predLang / quality / contamination) every trainingCorpus-chain
     * group joins — the r17 attribution measured the diff + span groups
     * as the build's dominant cost precisely because each re-ran these
@@ -1003,6 +976,20 @@ object Pipeline {
     }
   }
 
+  /** Materialize the FROZEN ingest-gate artifact shelf — every
+    * train-once relation/constant the admission and streaming gates
+    * consume, written as versioned parquet per corpus build. This is
+    * the production contract every admission scaladoc cites
+    * ("production ships the artifact, never re-derives it in-stream")
+    * made concrete: one stage builds ALL of them from one corpus
+    * snapshot, so a deployment versions one directory per build and
+    * the gates read relations, not re-run trainers. Artifacts are
+    * deliberately the SMALL frozen states (merge lists, indexes, cut
+    * tables, centroids/codebooks, per-gate split ids); the
+    * corpus-scale side tables (inverted lists, admitted corpora) are
+    * materializeVectorCorpus/materializeTrainingCorpus's layers.
+    * Returns per-artifact row counts (the build manifest).
+    */
   def materializeFrozenArtifacts(spark: SparkSession, sfDir: String,
       outDir: String,
       planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,

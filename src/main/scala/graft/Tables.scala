@@ -14,7 +14,8 @@ object Tables {
 
   /** events.ts arrives as epoch-nanos Long regardless of how the driver
     * generated the parquet. Two generations exist: TIMESTAMP(NANOS) (read
-    * as Long via the nanosAsLong legacy conf — full precision) and
+    * as Long via the nanosAsLong legacy conf, which every session sets
+    * (Session.local) — full precision) and
     * TIMESTAMP(µs, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ; widened
     * to nanos here). Downstream operators always see a Long of epoch-nanos
     * and truncate to µs (`ts div 1000`) — the precision DuckDB's
@@ -24,7 +25,6 @@ object Tables {
     * DuckDB's treat-naive-as-UTC epoch semantics.
     */
   def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => df

@@ -172,7 +172,7 @@ object Selection {
     * the real multinomial model does).
     */
   def xTextNbClass(spark: SparkSession, dir: String): DataFrame =
-    nbClass(spark, dir, TextAnalysis.md5Bucket(100) < 80)
+    nbClass(Tables.documents(spark, dir), TextAnalysis.md5Bucket(100) < 80)
 
   /** Frozen-classifier admission arm — the admission matrix's pattern
     * (IVF/PQ/IVFADC/BPE/LSH/MinHash all have one): the class priors and
@@ -183,8 +183,8 @@ object Selection {
     * batch arrived. Same parameterized twin, trainWhere swapped.
     */
   def xTextNbAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val split = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
-    nbClass(spark, dir, col("doc_id") < split)
+    val docs = Tables.documents(spark, dir)
+    nbClass(docs, col("doc_id") < Tables.admissionSplit(docs, "doc_id"))
   }
 
   /** The FROZEN NB state a streaming classifier gate ships to executors
@@ -201,9 +201,9 @@ object Selection {
     */
   def nbFrozen(spark: SparkSession, dir: String)
       : Seq[(String, Double, Double, Map[String, Double])] = {
-    val split = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
-    val docs = Tables.documents(spark, dir)
-      .withColumn("tr", col("doc_id") < split)
+    val all = Tables.documents(spark, dir)
+    val split = Tables.admissionSplit(all, "doc_id")
+    val docs = all.withColumn("tr", col("doc_id") < split)
     val trainToks = docs.filter(col("tr"))
       .select(col("source"), explode(split2(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
@@ -239,10 +239,8 @@ object Selection {
     */
   private def split2(text: Column): Column = split(lowerS(text), " ")
 
-  private def nbClass(spark: SparkSession, dir: String,
-      trainCond: Column): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .withColumn("tr", trainCond)
+  private def nbClass(documents: DataFrame, trainCond: Column): DataFrame = {
+    val docs = documents.withColumn("tr", trainCond)
     val toks = docs.select(col("doc_id"), col("source"), col("tr"),
         explode(split(lowerS(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")

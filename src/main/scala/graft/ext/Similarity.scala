@@ -1346,7 +1346,7 @@ object Similarity {
     // admitted post-build arrivals' inverted-list rows, unioned under
     // the same frozen centroids. Absent on a fresh shelf; when present
     // it loads through the same stamp guard (appends restamp it).
-    // Existence via the Hadoop FS API (the commitSigBatch idiom) —
+    // Existence via the Hadoop FS API (the commitBatch idiom) —
     // this is a production load path, not a local-only probe.
     val deltaPath = new org.apache.hadoop.fs.Path(
       s"$shelfDir/art_serve_delta")

@@ -470,9 +470,8 @@ object TextAnalysis {
     (merges.result(), docs)
   }
 
-  private def bpeTokenize(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), split(lowerS(col("text")), " ").as("toks"))
+  private def bpeTokenize(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(lowerS(col("text")), " ").as("toks"))
 
   private def bpeSummary(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("n_before"),
@@ -484,7 +483,7 @@ object TextAnalysis {
       rounds: Int,
       onRound: (Int, Double) => Unit = (_, _) => (),
       checkpointEvery: Int = bpeCheckpointEvery): DataFrame = {
-    val docs0 = bpeTokenize(spark, dir)
+    val docs0 = bpeTokenize(Tables.documents(spark, dir))
       .withColumn("n_before", size(col("toks")).cast("long"))
     val (_, docs) = bpeTrain(docs0, rounds, onRound, checkpointEvery)
     bpeSummary(docs)
@@ -524,7 +523,7 @@ object TextAnalysis {
     */
   def xTextBpeVocab(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (merges, _) = bpeTrain(bpeTokenize(spark, dir), bpeRounds)
+    val (merges, _) = bpeTrain(bpeTokenize(Tables.documents(spark, dir)), bpeRounds)
     merges.toDF("round", "a", "b", "n").orderBy("round")
   }
 
@@ -545,7 +544,7 @@ object TextAnalysis {
     * and reads the complement — hash-gated bitwise.
     */
   def xTextBpeAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val all = bpeTokenize(spark, dir)
+    val all = bpeTokenize(Tables.documents(spark, dir))
       .withColumn("n_before", size(col("toks")).cast("long"))
     val (half, merges) = admitMergeList(spark, dir)
     var admit = all.filter(col("doc_id") >= half)
@@ -564,9 +563,10 @@ object TextAnalysis {
     */
   private[graft] def admitMergeList(spark: SparkSession, dir: String)
       : (Long, Vector[(String, String)]) = {
-    val half = Tables.admissionSplit(Tables.documents(spark, dir), "doc_id")
+    val docs = Tables.documents(spark, dir)
+    val half = Tables.admissionSplit(docs, "doc_id")
     val (merges, _) = bpeTrain(
-      bpeTokenize(spark, dir).filter(col("doc_id") < half), bpeRounds)
+      bpeTokenize(docs).filter(col("doc_id") < half), bpeRounds)
     (half, merges.map(m => (m._2, m._3)))
   }
 

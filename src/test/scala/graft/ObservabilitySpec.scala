@@ -728,6 +728,13 @@ class ObservabilitySpec extends AnyFunSuite {
       Pipeline.appendServeTombstones(spark, dir,
         Seq(stock(1).vec_id, stock(7).vec_id).toDF("id2"))
     }
+    // A named id with a leading digit is refused by the one batch-id
+    // rule, before any guard (the id is served and not tombstoned).
+    val badId = intercept[IllegalArgumentException] {
+      Pipeline.appendServeTombstones(spark, dir,
+        Seq(stock(2).vec_id).toDF("id2"), batchId = "1tomb")
+    }
+    assert(badId.getMessage.contains("bad batch id"), badId.getMessage)
     assert(ext.Similarity.annServeStateFromArtifacts(spark, dir)._2
       .count() == expected.size.toLong,
       "a refused batch must leave the served state untouched")
@@ -965,6 +972,43 @@ class ObservabilitySpec extends AnyFunSuite {
     val (_, served) = ext.Similarity.annServeStateFromArtifacts(spark, dir)
     assert(served.count() == nBase + nDelta - tombIds.size,
       "served state after concurrent appends must fold both batches")
+  }
+
+  test("the tombstone guard runs under the stamp lock: it waits for a held lock, then refuses an unserved id") {
+    import spark.implicits._
+    // compactServeIndex deletes art_serve_delta under the stamp lock, so
+    // an append guard that scans it must run under that lock too. Hold
+    // the lock here and start a tombstone append of an unserved id: the
+    // append must block at the lock instead of running its guard, and
+    // refuse the id once the lock is released.
+    val dir = GraftTest.copyShelf("shelf_tomb_lock")
+    val unserved = spark.read.parquet(s"$dir/art_serve_inverted")
+      .agg(max(col("id2"))).head().getLong(0) + 500L
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val append = new Thread(() =>
+      try {
+        Pipeline.appendServeTombstones(spark, dir, Seq(unserved).toDF("id2"))
+        ()
+      } catch { case t: Throwable => err.set(t) })
+    val waited = ArtifactShelf.restamp(spark, dir) { old =>
+      append.start()
+      def atLock = append.getState == Thread.State.BLOCKED &&
+        append.getStackTrace.exists(_.getMethodName == "restamp")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (append.isAlive && !atLock && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      append.join(2000)
+      (old, append.isAlive)
+    }
+    assert(waited, s"the tombstone append ended while the stamp lock was " +
+      s"held — its guard ran outside the lock: ${err.get}")
+    append.join(60000)
+    assert(!append.isAlive, "the tombstone append never finished")
+    assert(err.get.isInstanceOf[IllegalArgumentException] &&
+      err.get.getMessage.contains("not in the served base ∪ delta"),
+      s"the guard must refuse the unserved id once the lock is free: ${err.get}")
+    assert(!new java.io.File(s"$dir/art_serve_tombstones").exists(),
+      "a refused tombstone batch must commit nothing")
   }
 
   test("a group refresh beside a delta append keeps both stamp rows full-scan-exact, every load passes") {

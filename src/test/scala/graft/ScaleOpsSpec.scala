@@ -239,6 +239,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Pipeline.admitBatch(spark, statePath, b1, batchId = "bad%25id")
     }
+    // A leading digit: the one batch-id rule every append shares.
+    intercept[IllegalArgumentException] {
+      Pipeline.admitBatch(spark, statePath, b1, batchId = "1batch")
+    }
   }
 
   test("hll sketch merge equals the full sketch and tracks the exact distinct count") {

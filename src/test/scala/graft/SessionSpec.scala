@@ -8,10 +8,15 @@ import scala.jdk.CollectionConverters._
   * gate and the test fixture — comes from `Session.local`, so they all
   * run one configuration; the shelf's build stamp is read and written
   * only by `ArtifactShelf`, so its format and lock stay in one place;
-  * and the near-dup cluster rule and the admission split each have one
-  * definition.
+  * and the near-dup cluster rule, the admission split and the batch-id
+  * charset rule each have one definition.
   */
 class SessionSpec extends AnyFunSuite {
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+  }
+
   /** Non-comment lines matching `pattern` in the `.scala` files under
     * `roots`, outside the file named `owner`, as `path:line`.
     */
@@ -24,10 +29,6 @@ class SessionSpec extends AnyFunSuite {
     }
     assert(sources.exists(_.endsWith(owner)),
       s"source scan found no $owner under ${Paths.get("").toAbsolutePath}")
-    def isComment(line: String): Boolean = {
-      val t = line.trim
-      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
-    }
     sources.filterNot(_.endsWith(owner)).flatMap { (p: Path) =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
         case (line, i) if !isComment(line) && pattern.findFirstIn(line).nonEmpty =>
@@ -61,5 +62,15 @@ class SessionSpec extends AnyFunSuite {
     val split = offenders(Seq("src/main/scala"), "Tables.scala", """expr\("\(max\(""".r)
     assert(split.isEmpty,
       s"split admission halves through Tables.admissionSplit: ${split.mkString(", ")}")
+  }
+
+  test("the batch-id charset rule is written once, in Pipeline's id helper") {
+    val rule = """\.matches\("\[A-Za-z""".r
+    val outside = offenders(Seq("src/main/scala"), "Pipeline.scala", rule)
+    val inside = Files.readAllLines(Paths.get("src/main/scala/graft/Pipeline.scala"))
+      .asScala.count(line => !isComment(line) && rule.findFirstIn(line).nonEmpty)
+    assert(outside.isEmpty && inside == 1,
+      s"resolve batch ids through Pipeline.batchIdOf: $inside rules in " +
+        s"Pipeline.scala, others at ${outside.mkString(", ")}")
   }
 }
