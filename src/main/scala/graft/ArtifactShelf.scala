@@ -39,11 +39,25 @@ object ArtifactShelf {
   /** Overwrites `path` with `df` and returns its (row count,
     * fingerprint) — the [[stampOf]] pair of what landed — observed on
     * the write job itself, so a publish runs no read-back job.
+    *
+    * With `partitionBy = Some(k)` the relation lands Hive-partitioned
+    * on `k`, one file per partition directory (repartition on the key,
+    * then `partitionBy`). `k` moves to the last column, the order a
+    * partitioned read returns, so the fingerprint is that of the
+    * read-back (given the key's type: plain reads infer it from the
+    * directory names).
     */
-  private[graft] def publish(df: DataFrame, path: String): (Long, Long) = {
+  private[graft] def publish(df: DataFrame, path: String,
+      partitionBy: Option[String] = None): (Long, Long) = {
+    import org.apache.spark.sql.functions.col
+    val laid = partitionBy.fold(df) { k =>
+      df.select((df.columns.filter(_ != k) :+ k).map(col): _*)
+        .repartition(col(k))
+    }
     val obs = org.apache.spark.sql.Observation()
-    val (n, h) = stampAggs(df)
-    df.observe(obs, n, h).write.mode("overwrite").parquet(path)
+    val (n, h) = stampAggs(laid)
+    val writer = laid.observe(obs, n, h).write.mode("overwrite")
+    partitionBy.fold(writer)(writer.partitionBy(_)).parquet(path)
     val m = obs.get
     (m("n").asInstanceOf[Long], fold(m("h").asInstanceOf[BigDecimal]))
   }

@@ -22,9 +22,10 @@ object Explain {
         // and explain the date-window scan so PartitionFilters are
         // inspectable (the partition-pruning story in SCALE.md).
         println(s"\n========== $k ==========")
-        val path = Pipeline.materializeFactPartitioned(spark, sfDir,
-          "/tmp/graft_explain_fact")
-        show(Pipeline.factDateWindow(spark, path, "1995-01-01", "1995-02-28"))
+        val out = "/tmp/graft_explain_fact"
+        Pipeline.materializeFactPartitioned(spark, sfDir, out)
+        show(Pipeline.factDateWindow(spark, s"$out/fact_prices_p",
+          "1995-01-01", "1995-02-28"))
       } else SparkEntry.queries.get(k) match {
         case Some(fn) =>
           println(s"\n========== $k ==========")

@@ -88,19 +88,22 @@ object Pipeline {
   /** Materialize the cleaned, split-assigned training corpus partitioned
     * by split (`training_corpus/split=train|val|test/`) — the layout a
     * training run consumes, where reading one split prunes the others'
-    * directories entirely. Same single-file-per-partition write
-    * discipline as materializeFactPartitioned (3 splits → repartition on
-    * the key; at 100 TB the writer would add a second high-cardinality
-    * repartition column to fan each split across many files).
+    * directories entirely. One file per split (ArtifactShelf.publish's
+    * partitioned layout; at 100 TB the writer would add a second
+    * high-cardinality repartition column to fan each split across many
+    * files). Returns the written row count by relation name.
     */
   def materializeTrainingCorpus(spark: SparkSession, sfDir: String,
-      outDir: String, labels: Option[DataFrame] = None): String = {
-    val path = s"$outDir/training_corpus"
-    ext.CorpusPrep.trainingCorpus(spark, sfDir, labels)
-      .repartition(col("split"))
-      .write.mode("overwrite").partitionBy("split").parquet(path)
-    path
-  }
+      outDir: String, labels: Option[DataFrame] = None): Map[String, Long] =
+    Map(publishAs(outDir, "training_corpus",
+      ext.CorpusPrep.trainingCorpus(spark, sfDir, labels), Some("split")))
+
+  /** Publishes `df` to `$outDir/$name` (ArtifactShelf.publish); returns
+    * the name with the row count that landed.
+    */
+  private def publishAs(outDir: String, name: String, df: DataFrame,
+      partitionBy: Option[String] = None): (String, Long) =
+    name -> ArtifactShelf.publish(df, s"$outDir/$name", partitionBy)._1
 
   /** Materialize the SPAN-CLEANED text corpus — the Lee et al.
     * deliverable a training run actually reads: the span-composed
@@ -114,16 +117,14 @@ object Pipeline {
     * the artifact IS the gated result, with its text attached.
     */
   def materializeSpanCleanCorpus(spark: SparkSession, sfDir: String,
-      outDir: String): String = {
-    val path = s"$outDir/clean_documents_spans"
+      outDir: String): Map[String, Long] = {
     val nonEval = Tables.documents(spark, sfDir)
       .filter(col("source") =!= "src0")
-    ext.CorpusPrep.spansCorpus(spark, sfDir)
-      .select("doc_id", "split", "pred_lang")
-      .join(ext.Dedup.spanRemoveText(nonEval), Seq("doc_id"))
-      .repartition(col("split"))
-      .write.mode("overwrite").partitionBy("split").parquet(path)
-    path
+    Map(publishAs(outDir, "clean_documents_spans",
+      ext.CorpusPrep.spansCorpus(spark, sfDir)
+        .select("doc_id", "split", "pred_lang")
+        .join(ext.Dedup.spanRemoveText(nonEval), Seq("doc_id")),
+      Some("split")))
   }
 
   /** Materialize the VECTOR side of the full-refresh DAG — the
@@ -155,19 +156,15 @@ object Pipeline {
   def materializeVectorCorpus(spark: SparkSession, sfDir: String,
       outDir: String,
       planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,
-      kCells: Int = 16): (String, String) = {
-    val corpusPath = s"$outDir/clean_vectors"
-    ext.Similarity.xDedupEmbCorpusCentral(spark, sfDir, planes = planes)
-      .join(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"),
-        Seq("vec_id"))
-      .repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(corpusPath)
-    val scoresPath = s"$outDir/vector_scores"
-    ext.Similarity.xGraphPagerankSelect(spark, sfDir, kCells = kCells)
-      .repartition(col("selected"))
-      .write.mode("overwrite").partitionBy("selected").parquet(scoresPath)
-    (corpusPath, scoresPath)
-  }
+      kCells: Int = 16): Map[String, Long] =
+    Map(
+      publishAs(outDir, "clean_vectors",
+        ext.Similarity.xDedupEmbCorpusCentral(spark, sfDir, planes = planes)
+          .join(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"),
+            Seq("vec_id")), Some("label")),
+      publishAs(outDir, "vector_scores",
+        ext.Similarity.xGraphPagerankSelect(spark, sfDir, kCells = kCells),
+        Some("selected")))
 
   /** Materialize the corpus OBSERVABILITY artifacts — the r13 column:
     * the data cards, the per-stage drop-attribution audits, and the
@@ -184,11 +181,7 @@ object Pipeline {
   def materializeObservability(spark: SparkSession, sfDir: String,
       outDir: String,
       planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,
-      kCells: Int = 16): Map[String, String] = {
-    def write(name: String, df: DataFrame): (String, String) = {
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      name -> s"$outDir/$name"
-    }
+      kCells: Int = 16): Map[String, Long] = {
     // DEPLOYED attribution shape (r14): the per-stage verdict relations
     // persist FIRST (the chains run once, here), then both audits are
     // the id-join + CASE + rollup TAIL over the persisted relations —
@@ -200,15 +193,16 @@ object Pipeline {
     // materializeVectorCorpus) — they parameterize the VERDICT chains;
     // the tail and the published shapes are knob-invariant.
     val verdDir = materializePrepVerdicts(spark, sfDir, outDir, planes, kCells)
-    Map(
-      write("corpus_card", ext.TextAnalysis.xCorpusManifest(spark, sfDir)),
-      write("corpus_audit", ext.CorpusPrep.auditRollup(
-        ext.CorpusPrep.auditFromArtifacts(spark, verdDir))),
-      write("corpus_drift", ext.TextAnalysis.xCorpusDrift(spark, sfDir)),
-      write("emb_card", ext.Similarity.xEmbManifest(spark, sfDir)),
-      write("emb_audit", ext.Similarity.embAuditRollup(
-        ext.Similarity.embAuditFromArtifacts(spark, sfDir, verdDir))),
-      write("emb_drift", ext.Similarity.xEmbDrift(spark, sfDir)))
+    Seq(
+      "corpus_card" -> ext.TextAnalysis.xCorpusManifest(spark, sfDir),
+      "corpus_audit" -> ext.CorpusPrep.auditRollup(
+        ext.CorpusPrep.auditFromArtifacts(spark, verdDir)),
+      "corpus_drift" -> ext.TextAnalysis.xCorpusDrift(spark, sfDir),
+      "emb_card" -> ext.Similarity.xEmbManifest(spark, sfDir),
+      "emb_audit" -> ext.Similarity.embAuditRollup(
+        ext.Similarity.embAuditFromArtifacts(spark, sfDir, verdDir)),
+      "emb_drift" -> ext.Similarity.xEmbDrift(spark, sfDir))
+      .map { case (name, df) => publishAs(outDir, name, df.coalesce(1)) }.toMap
   }
 
   /** Persist the slim per-stage VERDICT relations both preps' deployed
@@ -756,31 +750,23 @@ object Pipeline {
     * fact_prices under a Hive-style partition column derived from
     * effective_date, so chart-1-style date-window scans (reference
     * portfolio_app/app.py:84-113) prune whole directories instead of
-    * filtering rows out of a full scan. `granularity` picks the key:
-    * "month" (default — right-sized until a day's volume reaches
-    * multiple row-group sizes) or "day" (the 100 TB layout, where one
-    * partition ≈ one ingest batch). The derived key is kept alongside
+    * filtering rows out of a full scan. The key is the month
+    * (`yyyy-MM`), right-sized until a day's volume reaches multiple
+    * row-group sizes. The derived key is kept alongside
     * effective_date: row predicates stay on the real date while the key
-    * drives pruning — `factDateWindow` pushes both. The pre-write
+    * drives pruning — `factDateWindow` pushes both. The publish's
     * repartition on the key yields one file per partition directory
     * instead of one per task × partition (the small-files antipattern);
-    * at 100 TB with skewed days, AQE splits the hot writer tasks.
-    * Returns the written path. Pruning is plan-asserted by ScaleOpsSpec
+    * at 100 TB with skewed months, AQE splits the hot writer tasks.
+    * Returns the written row count by relation name (`fact_prices_p`).
+    * Pruning is plan-asserted by ScaleOpsSpec
     * ("date-partitioned fact: date-window scan prunes partitions").
     */
   def materializeFactPartitioned(spark: SparkSession, sfDir: String,
-      outDir: String, granularity: String = "month"): String = {
-    val key = granularity match {
-      case "day" => col("effective_date").cast("string")
-      case _     => date_format(col("effective_date"), "yyyy-MM")
-    }
-    val path = s"$outDir/fact_prices_p"
-    ops.Marts.factBuild(spark, sfDir)
-      .withColumn("p_date", key)
-      .repartition(col("p_date"))
-      .write.mode("overwrite").partitionBy("p_date").parquet(path)
-    path
-  }
+      outDir: String): Map[String, Long] =
+    Map(publishAs(outDir, "fact_prices_p", ops.Marts.factBuild(spark, sfDir)
+      .withColumn("p_date", date_format(col("effective_date"), "yyyy-MM")),
+      Some("p_date")))
 
   /** The reference's chart-1 date-window scan against the partitioned
     * layout: the window predicate lands on BOTH the partition key
@@ -788,15 +774,11 @@ object Pipeline {
     * effective_date (exact row bound inside edge partitions).
     */
   def factDateWindow(spark: SparkSession, path: String, from: String,
-      to: String, granularity: String = "month"): DataFrame = {
-    val (lo, hi) = granularity match {
-      case "day" => (from, to)
-      case _     => (from.substring(0, 7), to.substring(0, 7))
-    }
+      to: String): DataFrame =
     spark.read.parquet(path)
-      .filter(col("p_date") >= lo && col("p_date") <= hi)
+      .filter(col("p_date") >= from.substring(0, 7) &&
+        col("p_date") <= to.substring(0, 7))
       .filter(col("effective_date").between(from, to))
-  }
 
   /** The shelf's REFRESH GROUPS: each gate's artifact relations plus
     * its `art_splits` row, built TOGETHER by one trainer call — group
@@ -857,7 +839,8 @@ object Pipeline {
       ext.Dedup.nearDupLabels(spark, sfDir).localCheckpoint()))
     group match {
       case "bpe" =>
-        val (half, merges) = ext.TextAnalysis.admitMergeList(spark, sfDir)
+        val (half, merges) = ext.TextAnalysis.admitMergeList(
+          Tables.documents(spark, sfDir))
         (Seq("art_bpe_merges" -> merges.zipWithIndex
           .map { case ((a, b), i) => (i + 1L, a, b) }
           .toDF("round", "a", "b")),
@@ -988,27 +971,15 @@ object Pipeline {
     * tables, centroids/codebooks, per-gate split ids); the
     * corpus-scale side tables (inverted lists, admitted corpora) are
     * materializeVectorCorpus/materializeTrainingCorpus's layers.
-    * Returns per-artifact row counts (the build manifest).
+    *
+    * The build iterates [[shelfGroup]] group by group and times each
+    * group's trainer passes AND its artifact writes (trainers are lazy —
+    * cost lands at the write), plus a `labels` entry (the shared
+    * near-dup chain, paid once), a `metrics` entry and a `finalize`
+    * entry (art_splits + the build stamp). Returns (per-artifact row
+    * counts — the build manifest, per-group seconds).
     */
   def materializeFrozenArtifacts(spark: SparkSession, sfDir: String,
-      outDir: String,
-      planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,
-      kCells: Int = 16): Map[String, Long] =
-    materializeFrozenArtifactsTimed(spark, sfDir, outDir, planes,
-      kCells)._1
-
-  /** The full shelf build with PER-GROUP wall attribution (r17 — the
-    * r16 verdict's task #8: the 100×-grown build is 8.9× and the next
-    * scale push needs to know which trainer dominates without
-    * re-instrumenting). Same ONE construction per artifact
-    * ([[shelfGroup]]); the build now iterates group-by-group so each
-    * group's timing covers its trainer passes AND its artifact writes
-    * (trainers are lazy — cost lands at the write), plus a `labels`
-    * entry (the shared near-dup chain, paid once) and a `finalize`
-    * entry (art_splits + the build stamp). Returns (per-artifact row
-    * counts, per-group seconds).
-    */
-  def materializeFrozenArtifactsTimed(spark: SparkSession, sfDir: String,
       outDir: String,
       planes: Array[Array[Array[Double]]] = ext.Similarity.tablePlanes,
       kCells: Int = 16): (Map[String, Long], Map[String, Double]) = {
@@ -1113,8 +1084,8 @@ object Pipeline {
     val labels = Some(ext.Dedup.nearDupLabels(spark, sfDir))
     val counts = run(spark, sfDir, outDir, labels)
     counts.toSeq.sortBy(_._1).foreach { case (k, v) => println(s"$k: $v rows") }
-    val tc = materializeTrainingCorpus(spark, sfDir, outDir, labels)
-    println(s"training_corpus: ${spark.read.parquet(tc).count()} rows (split-partitioned)")
+    materializeTrainingCorpus(spark, sfDir, outDir, labels).foreach {
+      case (k, v) => println(s"$k: $v rows (split-partitioned)") }
     // The production entrypoint DERIVES its vector-layer grid from the
     // corpus size (the gridFor schedule — gated sf corpora resolve to
     // the byte-stable defaults, a 100×-grown corpus to the wide
@@ -1122,20 +1093,17 @@ object Pipeline {
     val (planes, kCells) = ext.Similarity.gridFor(
       Tables.embeddings(spark, sfDir).count())
     println(s"grid: ${planes.length}x${planes(0).length} banding, $kCells cells")
-    val (cv, vs) = materializeVectorCorpus(spark, sfDir, outDir, planes, kCells)
-    println(s"clean_vectors: ${spark.read.parquet(cv).count()} rows (label-partitioned)")
-    println(s"vector_scores: ${spark.read.parquet(vs).count()} rows (selection-partitioned)")
-    materializeFrozenArtifacts(spark, sfDir, outDir, planes, kCells)
+    val vc = materializeVectorCorpus(spark, sfDir, outDir, planes, kCells)
+    println(s"clean_vectors: ${vc("clean_vectors")} rows (label-partitioned)")
+    println(s"vector_scores: ${vc("vector_scores")} rows (selection-partitioned)")
+    materializeFrozenArtifacts(spark, sfDir, outDir, planes, kCells)._1
       .toSeq.sortBy(_._1)
       .foreach { case (k, v) => println(s"$k: $v rows (frozen artifact)") }
-    val sc = materializeSpanCleanCorpus(spark, sfDir, outDir)
-    println(s"clean_documents_spans: ${spark.read.parquet(sc).count()} rows " +
-      "(split-partitioned, span-cleaned text)")
+    materializeSpanCleanCorpus(spark, sfDir, outDir).foreach { case (k, v) =>
+      println(s"$k: $v rows (split-partitioned, span-cleaned text)") }
     materializeObservability(spark, sfDir, outDir, planes, kCells)
       .toSeq.sortBy(_._1)
-      .foreach { case (k, p) =>
-        println(s"$k: ${spark.read.parquet(p).count()} rows (observability)")
-      }
+      .foreach { case (k, v) => println(s"$k: $v rows (observability)") }
     spark.stop()
   }
 }

@@ -622,7 +622,7 @@ object ScaleProbe {
     * full-refresh story at scale. Prints one JSON line.
     */
   /** Focused shelf-build timing (r17): ONE timed
-    * materializeFrozenArtifactsTimed run against an existing grown work
+    * materializeFrozenArtifacts run against an existing grown work
     * dir at its derived grid, printing the per-group attribution —
     * the measurement loop for shelf-build optimizations without the
     * full deployed sweep. Usage:
@@ -640,7 +640,7 @@ object ScaleProbe {
     // on this host, so a build-shape change adjudicates on CPU, not
     // single-run walls (the sweep doctrine).
     val ((_, groups), wall, cpu) = new CpuMeter(spark).time(
-      Pipeline.materializeFrozenArtifactsTimed(
+      Pipeline.materializeFrozenArtifacts(
         spark, work, s"/tmp/graft_shelfbuild_x$nReplicas", planes, kCells))
     println(f"""{"shelfbuild":{"wall":$wall%.1f,"cpu":$cpu%.1f,"groups":${groupsJson(groups)}},""" +
       s""""replicas":$nReplicas,"work_kcells":$kCells,""" +
@@ -699,7 +699,7 @@ object ScaleProbe {
     // Artifact builds (once per corpus build in production, frozen +
     // versioned; timed for the record, NOT part of the ingest cost).
     val (merges, tTrain) = timed(
-      ext.TextAnalysis.admitMergeList(spark, base)._2)
+      ext.TextAnalysis.admitMergeList(Tables.documents(spark, base))._2)
     val (hubFps, tHub) = timed {
       val h = ext.TextAnalysis.boilerplateHubIndex(spark, base)
         .localCheckpoint()
@@ -750,10 +750,10 @@ object ScaleProbe {
     // the 100×-grown 8.9× build needed to say WHICH trainer dominates);
     // printed for both sides so the N× column reads next to its 1×.
     val ((_, groups1), shelf1) = timed(
-      Pipeline.materializeFrozenArtifactsTimed(
+      Pipeline.materializeFrozenArtifacts(
         spark, base, "/tmp/graft_shelf_x1"))
     val ((_, groupsN), shelfN) = timed(
-      Pipeline.materializeFrozenArtifactsTimed(
+      Pipeline.materializeFrozenArtifacts(
         spark, work, s"/tmp/graft_shelf_x$nReplicas", workPlanes,
         workCells))
     // The observability publish (r13): the six card/audit/drift

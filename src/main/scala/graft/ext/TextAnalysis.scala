@@ -544,9 +544,10 @@ object TextAnalysis {
     * and reads the complement — hash-gated bitwise.
     */
   def xTextBpeAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val all = bpeTokenize(Tables.documents(spark, dir))
+    val docs = Tables.documents(spark, dir)
+    val all = bpeTokenize(docs)
       .withColumn("n_before", size(col("toks")).cast("long"))
-    val (half, merges) = admitMergeList(spark, dir)
+    val (half, merges) = admitMergeList(docs)
     var admit = all.filter(col("doc_id") >= half)
     merges.foreach { case (a, b) =>
       admit = admit.withColumn("toks", bpeMergeExpr(a, b))
@@ -559,11 +560,11 @@ object TextAnalysis {
     * STREAMING tokenizer (StreamOps.tokenizeDocs, the runtime half of
     * the admission arm) and its batch-parity spec train through the one
     * shared path; a split or tie-break edit here cannot desync the
-    * batch gate from the streaming surface.
+    * batch gate from the streaming surface. `docs` is the documents
+    * relation.
     */
-  private[graft] def admitMergeList(spark: SparkSession, dir: String)
+  private[graft] def admitMergeList(docs: DataFrame)
       : (Long, Vector[(String, String)]) = {
-    val docs = Tables.documents(spark, dir)
     val half = Tables.admissionSplit(docs, "doc_id")
     val (merges, _) = bpeTrain(
       bpeTokenize(docs).filter(col("doc_id") < half), bpeRounds)
@@ -934,7 +935,8 @@ object TextAnalysis {
     * artifact (the wsMixToks twin).
     */
   private[graft] def bpeMixToks(spark: SparkSession, dir: String): DataFrame =
-    bpeMixToksFrozen(spark, dir, admitMergeList(spark, dir)._2)
+    bpeMixToksFrozen(spark, dir,
+      admitMergeList(Tables.documents(spark, dir))._2)
 
   /** The replay-only half of the BPE-unit mix input — the DEPLOYED
     * shape, where the merge list is an already-shipped artifact and

@@ -257,6 +257,24 @@ class ExtensionsSpec extends AnyFunSuite {
       }.toMap
     assert(receipts("empty") == ((0L, 0L)))
     assert(receipts("doubles")._1 == 5L && receipts("arrays")._1 == 3L)
+    // Partitioned publishes land the key last, where a partitioned read
+    // returns it. A string key reads back as written; a numeric one is
+    // read with the landed schema, because a plain read infers the
+    // key's type from the directory names (int for `id2=7`, not long).
+    val split = Seq((1L, "train", 0.5), (2L, "val", -0.0),
+      (3L, "train", Double.NaN), (4L, "test", 2.0)).toDF("doc_id", "split", "x")
+    val bySplit = ArtifactShelf.publish(split, s"$dir/split", Some("split"))
+    assert(new java.io.File(s"$dir/split").list().count(_.startsWith("split=")) == 3)
+    assert(bySplit == ArtifactShelf.stampOf(spark.read.parquet(s"$dir/split")),
+      "split-partitioned: publish receipt vs stampOf of the read-back")
+    assert(bySplit._1 == 4L && bySplit != ArtifactShelf.stampOf(split),
+      "the receipt hashes the landed column order, not the input's")
+    val byId = ArtifactShelf.publish(arrays, s"$dir/by_id2", Some("id2"))
+    val landed = org.apache.spark.sql.types.StructType(
+      arrays.schema.filterNot(_.name == "id2") :+ arrays.schema("id2"))
+    assert(byId == ArtifactShelf.stampOf(
+      spark.read.schema(landed).parquet(s"$dir/by_id2")),
+      "id2-partitioned: publish receipt vs stampOf of the read-back")
   }
 
   test("every chart degrades to its empty-state alert instead of throwing") {
@@ -1109,7 +1127,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // frozen-merge tokenizer split across TWO micro-batches — the map
     // is stateless, so batching must not matter, and every per-doc
     // (n_before, n_after, tok_hash) must equal x_text_bpe_admit's row.
-    val (half, merges) = ext.TextAnalysis.admitMergeList(spark, sf)
+    val (half, merges) = ext.TextAnalysis.admitMergeList(
+      Tables.documents(spark, sf))
     assert(merges.nonEmpty, "admission training produced no merges")
     val batch = ext.TextAnalysis.xTextBpeAdmit(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") ->

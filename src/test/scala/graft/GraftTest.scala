@@ -26,7 +26,7 @@ object GraftTest {
   // not per suite, keeps the wall bounded).
   lazy val shelf: (String, Map[String, Long]) = {
     val tmp = java.nio.file.Files.createTempDirectory("shelf_shared").toString
-    val counts = Pipeline.materializeFrozenArtifacts(spark, sf, tmp)
+    val counts = Pipeline.materializeFrozenArtifacts(spark, sf, tmp)._1
     (tmp, counts)
   }
 

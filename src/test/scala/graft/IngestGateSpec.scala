@@ -628,8 +628,8 @@ class IngestGateSpec extends AnyFunSuite {
     // operator's clean_hash over the same (non-eval) verdict base, and
     // the doc set must be exactly the span-composed prep's keep set.
     val tmp = java.nio.file.Files.createTempDirectory("spancorpus").toString
-    val path = Pipeline.materializeSpanCleanCorpus(spark, sf, tmp)
-    val art = spark.read.parquet(path)
+    Pipeline.materializeSpanCleanCorpus(spark, sf, tmp)
+    val art = spark.read.parquet(s"$tmp/clean_documents_spans")
       .select(col("doc_id"), md5(col("clean_text")).as("h"),
         col("n_clean_tokens"))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2))))

@@ -163,7 +163,8 @@ class ObservabilitySpec extends AnyFunSuite {
     // ship → load → gate, no trainer in the loop. Doubles compared by
     // raw bits (parquet binary64 round-trips exactly; this pins it).
     def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
-    val (bpeHalf, liveMerges) = ext.TextAnalysis.admitMergeList(spark, sf)
+    val (bpeHalf, liveMerges) = ext.TextAnalysis.admitMergeList(
+      Tables.documents(spark, sf))
     assert(ArtifactShelf.bpeMerges(spark, tmp) == liveMerges,
       "loaded merge list diverges from the trainer's")
     val (knnSplit, liveCents, _) = ext.Similarity.knnAdmitState(spark, sf)
@@ -1580,7 +1581,7 @@ class ObservabilitySpec extends AnyFunSuite {
     // operator's result — a drifted artifact would ship wrong answers
     // next to the corpus.
     val tmp = java.nio.file.Files.createTempDirectory("observ").toString
-    val paths = Pipeline.materializeObservability(spark, sf, tmp)
+    val counts = Pipeline.materializeObservability(spark, sf, tmp)
     val gated = Map(
       "corpus_card" -> ext.TextAnalysis.xCorpusManifest(spark, sf),
       "corpus_audit" -> ext.CorpusPrep.xLlmCorpusPrepAudit(spark, sf),
@@ -1588,9 +1589,9 @@ class ObservabilitySpec extends AnyFunSuite {
       "emb_card" -> ext.Similarity.xEmbManifest(spark, sf),
       "emb_audit" -> ext.Similarity.xEmbCorpusPrepAudit(spark, sf),
       "emb_drift" -> ext.Similarity.xEmbDrift(spark, sf))
-    assert(paths.keySet == gated.keySet)
+    assert(counts.keySet == gated.keySet)
     gated.foreach { case (name, df) =>
-      val artifact = spark.read.parquet(paths(name))
+      val artifact = spark.read.parquet(s"$tmp/$name")
         .collect().map(_.toSeq).toSet
       val expect = df.collect().map(_.toSeq).toSet
       assert(artifact == expect, s"$name artifact diverges from the gate")

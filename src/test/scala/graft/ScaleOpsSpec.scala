@@ -318,7 +318,8 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("date-partitioned fact: date-window scan prunes partitions") {
     val out = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val path = Pipeline.materializeFactPartitioned(spark, sf, out)
+    Pipeline.materializeFactPartitioned(spark, sf, out)
+    val path = s"$out/fact_prices_p"
     val win = Pipeline.factDateWindow(spark, path, "1995-03-01", "1995-04-30")
     val scan = win.queryExecution.executedPlan.collectLeaves().collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -340,7 +341,8 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("training corpus materializes split-partitioned and agrees with the rollup") {
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
-    val path = Pipeline.materializeTrainingCorpus(spark, sf, out)
+    val counts = Pipeline.materializeTrainingCorpus(spark, sf, out)
+    val path = s"$out/training_corpus"
     val splits = new java.io.File(path).listFiles()
       .filter(_.isDirectory).map(_.getName).sorted
     assert(splits.sameElements(Array("split=test", "split=train", "split=val")),
@@ -356,11 +358,17 @@ class ScaleOpsSpec extends AnyFunSuite {
     val fromRollup = ext.CorpusPrep.xLlmCorpusPrep(spark, sf)
       .agg(sum(col("n_docs"))).head.getLong(0)
     assert(spark.read.parquet(path).count() == fromRollup)
+    assert(counts == Map("training_corpus" -> fromRollup),
+      s"returned counts $counts, read back $fromRollup rows")
   }
 
   test("vector corpus materializes partitioned and agrees with the gated operators") {
     val out = java.nio.file.Files.createTempDirectory("graft_veccorpus").toString
-    val (cv, vs) = Pipeline.materializeVectorCorpus(spark, sf, out)
+    val counts = Pipeline.materializeVectorCorpus(spark, sf, out)
+    val (cv, vs) = (s"$out/clean_vectors", s"$out/vector_scores")
+    assert(counts == Map("clean_vectors" -> spark.read.parquet(cv).count(),
+      "vector_scores" -> spark.read.parquet(vs).count()),
+      s"returned counts $counts vs the read-back")
     // Rebuild parity: the partitioned artifact is exactly the gated
     // keep-central corpus (ids + labels), every row carrying its
     // embedding back from the source relation.

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
   * gate and the test fixture — comes from `Session.local`, so they all
   * run one configuration; the shelf's build stamp is read and written
   * only by `ArtifactShelf`, so its format and lock stay in one place;
+  * `Pipeline` overwrites relations only through `ArtifactShelf.publish`;
   * and the near-dup cluster rule, the admission split and the batch-id
   * charset rule each have one definition.
   */
@@ -16,6 +17,14 @@ class SessionSpec extends AnyFunSuite {
     val t = line.trim
     t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
   }
+
+  /** The 0-based indices of `p`'s non-comment lines matching `pattern`. */
+  private def matching(p: Path, pattern: scala.util.matching.Regex): Seq[Int] =
+    Files.readAllLines(p).asScala.zipWithIndex.collect {
+      case (line, i) if !isComment(line) && pattern.findFirstIn(line).nonEmpty => i
+    }.toSeq
+
+  private val pipeline = Paths.get("src/main/scala/graft/Pipeline.scala")
 
   /** Non-comment lines matching `pattern` in the `.scala` files under
     * `roots`, outside the file named `owner`, as `path:line`.
@@ -30,10 +39,7 @@ class SessionSpec extends AnyFunSuite {
     assert(sources.exists(_.endsWith(owner)),
       s"source scan found no $owner under ${Paths.get("").toAbsolutePath}")
     sources.filterNot(_.endsWith(owner)).flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if !isComment(line) && pattern.findFirstIn(line).nonEmpty =>
-          s"$p:${i + 1}"
-      }
+      matching(p, pattern).map(i => s"$p:${i + 1}")
     }
   }
 
@@ -67,10 +73,25 @@ class SessionSpec extends AnyFunSuite {
   test("the batch-id charset rule is written once, in Pipeline's id helper") {
     val rule = """\.matches\("\[A-Za-z""".r
     val outside = offenders(Seq("src/main/scala"), "Pipeline.scala", rule)
-    val inside = Files.readAllLines(Paths.get("src/main/scala/graft/Pipeline.scala"))
-      .asScala.count(line => !isComment(line) && rule.findFirstIn(line).nonEmpty)
+    val inside = matching(pipeline, rule).size
     assert(outside.isEmpty && inside == 1,
       s"resolve batch ids through Pipeline.batchIdOf: $inside rules in " +
         s"Pipeline.scala, others at ${outside.mkString(", ")}")
+  }
+
+  test("Pipeline's only raw write is commitBatch's staged batch commit") {
+    // Every other relation Pipeline overwrites goes through
+    // ArtifactShelf.publish, the one place a publish's layout and
+    // receipt are decided.
+    val lines = Files.readAllLines(pipeline).asScala
+    val start = lines.indexWhere(_.contains("def commitBatch("))
+    val end = lines.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start, "found no commitBatch in Pipeline.scala")
+    val (inCommit, outside) = matching(pipeline, """\.write\b""".r)
+      .partition(i => i > start && i < end)
+    assert(inCommit.size == 1 && outside.isEmpty,
+      s"publish Pipeline relations through ArtifactShelf.publish: raw writes at " +
+        s"${outside.map(i => s"Pipeline.scala:${i + 1}").mkString(", ")}, " +
+        s"${inCommit.size} in commitBatch")
   }
 }
