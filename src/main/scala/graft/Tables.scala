@@ -50,15 +50,24 @@ object Tables {
     * repartition unsplittable inputs right after the read; measured: the
     * BPE r12 arm's wall ≈ its CPU before, −66% wall at both 8 and 32
     * cores after). Inert at cluster scale, where scans arrive pre-split
-    * wider than the session — this never DOWN-partitions. CONTRACT: call
-    * only on NARROW plans (scan/filter/project); the width probe reads
-    * df.rdd.getNumPartitions, and under AQE that finalizes + executes
-    * any shuffle stages in the plan (double-execution risk otherwise).
+    * wider than the session — this never DOWN-partitions. Takes only
+    * NARROW plans: the width probe reads df.rdd.getNumPartitions, and
+    * under AQE that executes any shuffle or broadcast stage in the plan,
+    * which the repartition then runs again. So any optimized-plan
+    * operator other than a leaf (file scan, local, checkpointed or
+    * cached relation), Project, Filter, Sample or Union is rejected
+    * before the probe, without running a job.
     * Apply where the repartition amortizes: iterative loops and chains
     * whose first stage dominates their CPU — not blanket on every scan
     * (the sub-second relational tail would pay a shuffle for nothing).
     */
   private[graft] def widen(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    df.queryExecution.optimizedPlan.foreach {
+      case _: LeafNode | _: Project | _: Filter | _: Sample | _: Union =>
+      case op => throw new IllegalArgumentException(
+        s"Tables.widen takes a narrow plan; found ${op.nodeName}")
+    }
     val sc = df.sparkSession.sparkContext
     if (df.rdd.getNumPartitions < sc.defaultParallelism)
       df.repartition(sc.defaultParallelism)

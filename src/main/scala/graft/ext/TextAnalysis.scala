@@ -934,19 +934,21 @@ object TextAnalysis {
     * by the gated rollup and the streaming gate's BPE-unit cut
     * artifact (the wsMixToks twin).
     */
-  private[graft] def bpeMixToks(spark: SparkSession, dir: String): DataFrame =
-    bpeMixToksFrozen(spark, dir,
-      admitMergeList(Tables.documents(spark, dir))._2)
+  private[graft] def bpeMixToks(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    bpeMixToksFrozen(docs, admitMergeList(docs)._2)
+  }
 
   /** The replay-only half of the BPE-unit mix input — the DEPLOYED
     * shape, where the merge list is an already-shipped artifact and
     * the ingest pays only the K-deep narrow merge replay + counts
     * (what the 100× deployed probe measures; the gated arm above
-    * composes the trainer in for its oracle story).
+    * composes the trainer in for its oracle story). `documents` is the
+    * documents relation.
     */
-  private[graft] def bpeMixToksFrozen(spark: SparkSession, dir: String,
+  private[graft] def bpeMixToksFrozen(documents: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    var docs = Tables.documents(spark, dir)
+    var docs = documents
       .select(col("doc_id"), col("lang"),
         split(lowerS(col("text")), " ").as("toks"))
     merges.foreach { case (a, b) =>
@@ -963,7 +965,7 @@ object TextAnalysis {
     */
   private[graft] def corpusMixBpeFrozen(spark: SparkSession, dir: String,
       merges: Seq[(String, String)]): DataFrame =
-    mixFill(bpeMixToksFrozen(spark, dir, merges))
+    mixFill(bpeMixToksFrozen(Tables.documents(spark, dir), merges))
 
   /** Benchmark decontamination: per-document overlap of its distinct word
     * 3-grams with an evaluation set's gram vocabulary (here: docs from

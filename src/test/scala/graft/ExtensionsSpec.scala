@@ -445,6 +445,18 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(chart1 > 0 && page == chart1, s"warm page ran $page jobs, chart 1 alone $chart1")
   }
 
+  test("Tables.widen rejects a shuffling plan before any job runs and takes a narrow one") {
+    val docs = Tables.documents(spark, sf)
+    val counted = docs.groupBy("lang").count()
+    val jobs = jobsRun {
+      val e = intercept[IllegalArgumentException](Tables.widen(counted))
+      assert(e.getMessage.contains("Aggregate"), e.getMessage)
+    }
+    assert(jobs == 0, s"widen ran $jobs jobs before rejecting an aggregate")
+    val narrow = docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
+    assert(Tables.widen(narrow).count() == narrow.count())
+  }
+
   test("streaming sessionization emits closed sessions") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -15,10 +15,7 @@ import org.apache.spark.sql.SparkSession
 object GraftTest {
   val sf = "/root/testdata/sf0.001"
 
-  // Session-scoped temp warehouse (the bucketed-join specs write
-  // managed tables) — never the repo checkout's ./spark-warehouse.
-  lazy val spark: SparkSession = Session.local(8, "spark.sql.warehouse.dir" ->
-    java.nio.file.Files.createTempDirectory("graft_wh").toString)
+  lazy val spark: SparkSession = Session.local(8)
 
   // ONE frozen-artifact shelf build shared by every shelf-consuming
   // spec across all suites (the full shelf build runs every trainer

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Specs for the scale toolkit: salted skew joins, bucketed co-located
-  * joins (asserting the shuffle-free plan), and approximate-stat bounds.
+/** Specs for the scale toolkit: the similarity grid schedule, the
+  * parquet-backed signature state, plan shapes and partition pruning,
+  * the partitioned corpus materializations, and approximate-stat bounds.
   */
 class ScaleOpsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
@@ -80,82 +81,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // Deterministic: a derived grid is a pure function of its params.
     assert(probe200k.map(_.map(_.toVector).toVector).toVector ==
       S.probeGridFor(200000L).map(_.map(_.toVector).toVector).toVector)
-  }
-
-  test("salted join returns the same rows as the plain join") {
-    val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_linenumber", "l_suppkey")
-    val sup = Tables.supplier(spark, sf).select("s_suppkey", "s_name")
-      .withColumnRenamed("s_suppkey", "l_suppkey")
-    val plain = li.join(sup, Seq("l_suppkey")).count()
-    val salted = ext.Skew.saltedJoin(li, sup, "l_suppkey", salts = 8).count()
-    assert(salted == plain)
-  }
-
-  test("salted count equals plain count per key") {
-    val li = Tables.lineitem(spark, sf)
-    val plain = li.groupBy("l_suppkey").agg(count(lit(1)).as("n"))
-    val salted = ext.Skew.saltedCount(li, "l_suppkey", salts = 8)
-    assert(plain.join(salted.withColumnRenamed("n", "n2"), "l_suppkey")
-      .filter(col("n") =!= col("n2")).count() == 0)
-  }
-
-  test("bucketed join plans without a shuffle exchange") {
-    // Session-ISOLATED conf: the suites share one SparkSession and run
-    // concurrently (GraftTest + testForkedParallel), so mutating the
-    // shared session's autoBroadcastJoinThreshold — even briefly —
-    // would flip sibling suites' in-flight join plans (the clearCache
-    // race class). newSession() shares the SparkContext and catalog
-    // but owns its SQLConf, so the -1 threshold is visible only here.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // The JVM-shared session may use an earlier suite's warehouse dir;
-    // clear both catalog entries and any orphaned locations from prior runs.
-    val wh = new java.net.URI(s2.conf.get("spark.sql.warehouse.dir")).getPath
-    Seq("li_bucketed", "sup_bucketed").foreach { t =>
-      s2.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(wh, t)
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(dir)
-      }
-    }
-    ext.Bucketing.writeBucketed(
-      Tables.lineitem(s2, sf).select("l_orderkey", "l_suppkey", "l_extendedprice"),
-      "li_bucketed", buckets = 8, key = "l_suppkey")
-    ext.Bucketing.writeBucketed(
-      Tables.supplier(s2, sf).select("s_suppkey", "s_name"),
-      "sup_bucketed", buckets = 8, key = "s_suppkey")
-    val joined = ext.Bucketing.bucketedJoin(s2,
-      "li_bucketed", "sup_bucketed", "l_suppkey", "s_suppkey")
-    val physical = joined.queryExecution.executedPlan.toString
-    assert(!physical.contains("Exchange"),
-      s"expected shuffle-free bucketed join, got:\n$physical")
-    assert(joined.count() > 0)
-  }
-
-  test("incremental merge equals the full rebuild") {
-    import org.apache.spark.sql.functions.to_date
-    val li = Tables.lineitem(spark, sf)
-    val keys = Seq("l_suppkey")
-    val old_ = li.filter(to_date(col("l_shipdate")) < "1999-01-01")
-    val delta = li.filter(to_date(col("l_shipdate")) >= "1999-01-01")
-    val full = ops.Incremental.additiveRollup(li, keys, "l_extendedprice")
-    val merged = ops.Incremental.merge(
-      ops.Incremental.additiveRollup(old_, keys, "l_extendedprice"),
-      ops.Incremental.additiveRollup(delta, keys, "l_extendedprice"),
-      keys, "l_extendedprice")
-    val joined = ops.Incremental.finalizeView(full, "l_extendedprice").as("f")
-      .join(ops.Incremental.finalizeView(merged, "l_extendedprice").as("m"), keys)
-    assert(joined.count() == full.count())
-    val bad = joined.filter(
-      col("f.n_l_extendedprice") =!= col("m.n_l_extendedprice") ||
-      col("f.min_l_extendedprice") =!= col("m.min_l_extendedprice") ||
-      col("f.max_l_extendedprice") =!= col("m.max_l_extendedprice") ||
-      abs(col("f.sum_l_extendedprice") - col("m.sum_l_extendedprice")) > 1e-6)
-    assert(bad.count() == 0)
   }
 
   test("parquet-backed signature state: admitBatch emits pairs and grows the state") {
@@ -243,29 +168,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Pipeline.admitBatch(spark, statePath, b1, batchId = "1batch")
     }
-  }
-
-  test("hll sketch merge equals the full sketch and tracks the exact distinct count") {
-    import org.apache.spark.sql.functions.to_date
-    val li = Tables.lineitem(spark, sf)
-    val keys = Seq("l_returnflag")
-    val old_ = li.filter(to_date(col("l_shipdate")) < "1999-01-01")
-    val delta = li.filter(to_date(col("l_shipdate")) >= "1999-01-01")
-    val full = ops.Incremental.estimateDistinct(
-      ops.Incremental.distinctSketch(li, keys, "l_partkey"), "l_partkey")
-    val merged = ops.Incremental.estimateDistinct(
-      ops.Incremental.mergeSketches(
-        ops.Incremental.distinctSketch(old_, keys, "l_partkey"),
-        ops.Incremental.distinctSketch(delta, keys, "l_partkey"),
-        keys, "l_partkey"), "l_partkey")
-    val cmp = full.select(col("l_returnflag"), col("approx_distinct_l_partkey").as("f"))
-      .join(merged.select(col("l_returnflag"), col("approx_distinct_l_partkey").as("m")),
-        "l_returnflag")
-    assert(cmp.filter(col("f") =!= col("m")).count() == 0, "merge must equal full sketch")
-    val exact = li.groupBy("l_returnflag").agg(countDistinct("l_partkey").as("x"))
-    val err = cmp.join(exact, "l_returnflag")
-      .filter(abs(col("f") - col("x")) / col("x") > 0.05)
-    assert(err.count() == 0, "HLL estimate should be within 5% of exact")
   }
 
   test("plan shapes: fact build broadcasts dims and pushes filters to the scan") {

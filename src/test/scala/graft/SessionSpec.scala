@@ -9,8 +9,11 @@ import scala.jdk.CollectionConverters._
   * run one configuration; the shelf's build stamp is read and written
   * only by `ArtifactShelf`, so its format and lock stay in one place;
   * `Pipeline` overwrites relations only through `ArtifactShelf.publish`;
-  * and the near-dup cluster rule, the admission split and the batch-id
-  * charset rule each have one definition.
+  * the near-dup cluster rule, the admission split and the batch-id
+  * charset rule each have one definition; and every top-level object
+  * under `src/main/scala` defines a `main` or is named by another file
+  * there or under `perfbench/src`, so no module lives on for its tests
+  * alone.
   */
 class SessionSpec extends AnyFunSuite {
   private def isComment(line: String): Boolean = {
@@ -26,16 +29,18 @@ class SessionSpec extends AnyFunSuite {
 
   private val pipeline = Paths.get("src/main/scala/graft/Pipeline.scala")
 
+  /** The `.scala` files under `root`. */
+  private def scalaFiles(root: String): Vector[Path] =
+    scala.util.Using.resource(Files.walk(Paths.get(root))) { walk =>
+      walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    }
+
   /** Non-comment lines matching `pattern` in the `.scala` files under
     * `roots`, outside the file named `owner`, as `path:line`.
     */
   private def offenders(roots: Seq[String], owner: String,
       pattern: scala.util.matching.Regex): Seq[String] = {
-    val sources = roots.flatMap { root =>
-      scala.util.Using.resource(Files.walk(Paths.get(root))) { walk =>
-        walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
-      }
-    }
+    val sources = roots.flatMap(scalaFiles)
     assert(sources.exists(_.endsWith(owner)),
       s"source scan found no $owner under ${Paths.get("").toAbsolutePath}")
     sources.filterNot(_.endsWith(owner)).flatMap { (p: Path) =>
@@ -93,5 +98,23 @@ class SessionSpec extends AnyFunSuite {
       s"publish Pipeline relations through ArtifactShelf.publish: raw writes at " +
         s"${outside.map(i => s"Pipeline.scala:${i + 1}").mkString(", ")}, " +
         s"${inCommit.size} in commitBatch")
+  }
+
+  test("every top-level object is a main or is named by another source file") {
+    val topLevel = """object (\w+)\b.*""".r
+    val unreached = scalaFiles("src/main/scala").flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toVector
+      lines.zipWithIndex.collect { case (topLevel(name), start) =>
+        val end = lines.indexOf("}", start)
+        val body = lines.slice(start, if (end < 0) lines.size else end)
+        val isMain = body.exists(l => !isComment(l) && l.contains("def main("))
+        lazy val named = offenders(Seq("src/main/scala", "perfbench/src"),
+          p.toString, s"\\b$name\\.".r).nonEmpty
+        name -> (isMain || named)
+      }
+    }.collect { case (name, false) => name }
+    assert(unreached.isEmpty,
+      s"delete objects that define no main and no other engine or benchmark file names: " +
+        unreached.mkString(", "))
   }
 }
